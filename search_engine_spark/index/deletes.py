@@ -27,6 +27,7 @@ from pathlib import Path
 # hints against THIS module's globals, not the enclosing function's locals
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -198,7 +199,10 @@ def topk_live(
     ]
     final.sort(key=lambda r: (-r["score"], r[col]))
     return spark.createDataFrame(
-        [(int(r[col]), float(r["score"])) for r in final[:k]],
+        pa.table({
+            col: [int(r[col]) for r in final[:k]],
+            "score": [float(r["score"]) for r in final[:k]],
+        }),
         f"{col} long, score double",
     )
 

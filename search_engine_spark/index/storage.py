@@ -129,7 +129,9 @@ def _read_cached(spark: SparkSession, path: str, fallback_ddl: str) -> DataFrame
     fp = _dir_fingerprint(path)
     if fp is None:  # missing dir: empty-frame fallback, never cached
         return _read_or_empty(spark, path, fallback_ddl)
-    key = (spark.sparkContext.applicationId, path)
+    # per session, not per application (newSession() shares the context);
+    # the cached frame holds its session, so the id cannot be reused
+    key = (id(spark), path)
     hit = _READER_CACHE.get(key)
     if hit is not None and hit[0] == fp:
         return hit[1]

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from collections import Counter
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -105,8 +106,11 @@ def candidates_for_terms(
         .filter(F.col("term").isin(uniq))
         .select(*stat_cols)
     )
+    # Arrow-built: a local relation the broadcast reads on the driver, not a
+    # Python RDD it must evaluate
     qtf_df = spark.createDataFrame(
-        [(t, float(c)) for t, c in qtf.items()], "term string, qtf double"
+        pa.table({"term": list(qtf), "qtf": [float(c) for c in qtf.values()]}),
+        "term string, qtf double",
     )
     return postings.join(F.broadcast(stats), "term").join(
         F.broadcast(qtf_df), "term"

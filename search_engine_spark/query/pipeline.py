@@ -11,9 +11,9 @@ from __future__ import annotations
 
 import re
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..analysis.analyzer import tokenize
 from ..index.storage import IndexStore
@@ -21,10 +21,15 @@ from .bm25 import bm25_topk
 from .logical import combine
 from .parser import _WILDCARD_RE, ParsedQuery, parse_query
 from .phrase import phrase_topk
-from .snippets import add_snippets
+from .snippets import make_snippet
 from .wand import bm25_topk_wand
 
 _NEAR_OP_RE = re.compile(r"\bNEAR/\d+\b")
+_RESULT_DDL = (
+    "rank int, doc_id long, score double, conv_id string, turn_idx int, "
+    "role string, ts timestamp, snippet string"
+)
+_RESULT_COLS = [f.split()[0] for f in _RESULT_DDL.split(", ")]
 
 
 def _score_side(
@@ -75,6 +80,19 @@ def _expand_terms(
         for w in pq.fuzzies:
             terms.extend(expand_fuzzy(spark, store, w, limit=prefix_limit))
     return terms
+
+
+def docs_probe(
+    spark: SparkSession, store: IndexStore, ids: list[int]
+) -> DataFrame:
+    """The enrichment read: the six columns a result row needs, for the
+    top-k doc ids only (a pushed IN filter, so parquet skips row groups
+    instead of scanning the registry)."""
+    return (
+        store.docs(spark)
+        .filter(F.col("doc_id").isin(ids))
+        .select("doc_id", "conv_id", "turn_idx", "role", "ts", "text")
+    )
 
 
 def _logical_leaves(pq) -> list:
@@ -202,29 +220,25 @@ def search(
     if not with_metadata:
         return topk
 
-    # enrich the k rows only (J7/S6). The k scored rows are materialized
-    # driver-side (they are tiny by construction) so the doc-registry probe
-    # carries a pushed doc_id IN (...) filter — parquet min/max row-group
-    # skipping prunes the scan instead of reading the whole registry for k
-    # rows; the join side is the broadcast k-row relation as before.
+    # enrich the k rows only (J7/S6), on the driver. The k scored rows are
+    # collected (tiny by construction); ONE docs probe fetches their
+    # metadata and text as Arrow; snippets are built over <= k texts; the
+    # result is an Arrow-built local relation, so collecting it launches no
+    # further Spark job. Inner-join semantics: a doc missing from the
+    # registry is dropped, ranks stay dense. Arrow in, Arrow out keeps `ts`
+    # an instant — a detour through collected Rows would re-read it in the
+    # process time zone.
     top_rows = topk.collect()
     if not top_rows:
         return spark.createDataFrame(
-            [],
-            "rank int, doc_id long, score double, conv_id string, "
-            "turn_idx int, role string, ts timestamp, snippet string",
+            pa.table({c: [] for c in _RESULT_COLS}), _RESULT_DDL
         )
-    ids = [int(r["doc_id"]) for r in top_rows]
-    topk = spark.createDataFrame(
-        [(int(r["doc_id"]), float(r["score"])) for r in top_rows],
-        "doc_id long, score double",
-    )
-    docs = (
-        store.docs(spark)
-        .filter(F.col("doc_id").isin(ids))
-        .select("doc_id", "conv_id", "turn_idx", "role", "ts", "text")
-    )
-    enriched = docs.join(F.broadcast(topk), "doc_id", "inner")
+    probe = docs_probe(
+        spark, store, [int(r["doc_id"]) for r in top_rows]
+    ).toArrow()
+    at = {d: i for i, d in enumerate(probe.column("doc_id").to_pylist())}
+    hits = [r for r in top_rows if int(r["doc_id"]) in at]
+    docs = probe.take([at[int(r["doc_id"])] for r in hits])
     # snippet anchor tokens come from the OPERANDS, not the raw query:
     # operator words (AND/OR/NOT, the 'near' of NEAR/w) must not highlight
     # incidental occurrences of themselves in document text
@@ -246,20 +260,23 @@ def search(
     # as whole words, wildcard prefixes additionally as word-prefix matches
     # (an expansion term that is a stem may not appear verbatim in text)
     extra = [t for t in (expanded or []) if t not in raw_tokens]
-    enriched = add_snippets(
-        enriched, raw_tokens + extra, prefixes=pq.prefixes
-    )
-    # Window over <= k rows — driver-size safe by construction.
-    w_rank = (
-        enriched.orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .withColumn(
-            "rank",
-            F.row_number().over(Window.orderBy(F.desc("score"), F.asc("doc_id"))),
-        )
-    )
-    return w_rank.select(
-        "rank", "doc_id", "score", "conv_id", "turn_idx", "role", "ts", "snippet"
+    toks = [t for t in raw_tokens + extra if t]
+    pres = [p for p in pq.prefixes or [] if p]
+    return spark.createDataFrame(
+        pa.table({
+            "rank": list(range(1, len(hits) + 1)),
+            "doc_id": docs["doc_id"],
+            "score": [float(r["score"]) for r in hits],
+            "conv_id": docs["conv_id"],
+            "turn_idx": docs["turn_idx"],
+            "role": docs["role"],
+            "ts": docs["ts"],
+            "snippet": [
+                make_snippet(t or "", toks, pres)
+                for t in docs["text"].to_pylist()
+            ],
+        }),
+        _RESULT_DDL,
     )
 
 

@@ -24,6 +24,7 @@ from collections import Counter
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -612,4 +613,8 @@ def bm25_topk_wand(
         if not (r["suspect"] and int(r["doc_id"]) in verified_deleted)
     ]
     final.sort(key=lambda x: (-x[1], x[0]))
-    return spark.createDataFrame(final[:k], "doc_id long, score double")
+    top = final[:k]
+    return spark.createDataFrame(
+        pa.table({"doc_id": [d for d, _ in top], "score": [s for _, s in top]}),
+        "doc_id long, score double",
+    )

@@ -3,6 +3,8 @@ visible in `.explain` output — partition pruning on term buckets, parquet
 filter pushdown, broadcast joins for small sides, TakeOrderedAndProject for
 top-k (SURVEY.md §4)."""
 
+import re
+
 from pyspark.sql import functions as F
 
 
@@ -44,12 +46,14 @@ def test_bm25_topk_uses_take_ordered_and_broadcasts_stats(spark, index_store):
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
 
 
-def test_metadata_join_is_broadcast(spark, index_store):
+def test_enriched_result_is_local_relation(spark, index_store):
+    """The enriched top-k is built on the driver: its plan reads no
+    parquet, so collecting it launches no job."""
     from search_engine_spark.query.pipeline import search
 
-    df = search(spark, index_store, "spark", k=5)
-    plan = _plan(df)
-    assert "BroadcastHashJoin" in plan
+    plan = _plan(search(spark, index_store, "spark", k=5))
+    assert "LocalTableScan" in plan, plan
+    assert "Scan parquet" not in plan, plan
 
 
 def test_positions_scan_prunes_partitions(spark, index_store):
@@ -66,18 +70,18 @@ def test_positions_scan_prunes_partitions(spark, index_store):
 
 def test_enrichment_probe_pushes_doc_id_filter(spark, index_store):
     """Metadata enrichment must not scan the whole doc registry for k rows:
-    the probe side carries a pushed doc_id IN filter (row-group skipping)."""
-    from search_engine_spark.query.pipeline import search
+    the docs probe carries a pushed doc_id IN filter (row-group skipping)
+    and reads only the six columns a result row needs."""
+    from search_engine_spark.query.pipeline import docs_probe
 
-    df = search(spark, index_store, "spark", k=5)
-    plan = _plan(df)
-    scans = [p for p in plan.split("Scan parquet") if "/docs]" in p]
-    assert scans, plan
-    assert any(
-        "In(doc_id" in s.split("PushedFilters", 1)[1].split("\n", 1)[0]
-        for s in scans
-        if "PushedFilters" in s
-    ), plan
+    plan = _plan(docs_probe(spark, index_store, [3, 1, 4]))
+    assert "/docs]" in plan, plan
+    pushed = plan.split("PushedFilters", 1)[1].split("\n", 1)[0]
+    assert "In(doc_id" in pushed, plan
+    read = plan.split("ReadSchema", 1)[1].split("\n", 1)[0]
+    assert set(re.findall(r"[<,](\w+):", read)) == {
+        "doc_id", "conv_id", "turn_idx", "role", "ts", "text"
+    }, read
 
 
 def test_wand_segment_scan_prunes_by_term(spark, index_store):

@@ -54,3 +54,20 @@ def test_publish_into_partition_subdir_invalidates(spark, tmp_path):
     ).write.partitionBy("tbucket").parquet(staging)
     store.publish(staging, store.postings_path, "b1-")
     assert store.postings(spark).count() == 6
+
+
+def test_memo_is_per_session(spark, tmp_path):
+    """A newSession() shares the SparkContext (same application id) but
+    must get a reader bound to itself, never another session's frame."""
+    store = _mk_store(tmp_path)
+    spark.range(3).select(F.col("id").alias("doc_id")).write.parquet(
+        store.postings_path
+    )
+    other = spark.newSession()
+    a = store.postings(spark)
+    b = store.postings(other)
+    assert a.sparkSession is spark
+    assert b.sparkSession is other
+    assert store.postings(other) is b
+    assert store.postings(spark) is a
+    assert b.count() == 3
