@@ -500,7 +500,7 @@ def _spark_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _TRANSCRIPT_IX_DIR() -> str:
     """Shared by the Spark build and the oracle SQL string (the oracle
     reads the corpus sidecar parquet from this dir)."""
-    return os.environ.get("SPARK_GRAFT_TIX", "/tmp/se_entry_transcript_ix_v6")
+    return os.environ.get("SPARK_GRAFT_TIX", "/tmp/se_entry_transcript_ix_v7")
 
 
 def _transcript_store(spark: SparkSession):
@@ -508,49 +508,51 @@ def _transcript_store(spark: SparkSession):
     from search_engine_spark.index.builder import build_index
     from search_engine_spark.index.storage import IndexStore
 
-    # _v6: corpus sidecar parquet for the DuckDB oracle (stale memoized
-    # indexes from older layouts must not be reused)
+    # _v7: stores carry format_version (stale memoized indexes from older
+    # layouts must not be reused)
     ix_dir = _TRANSCRIPT_IX_DIR()
     store = IndexStore(ix_dir)
-    if not store.corpus_stats_path.exists():
-        # exclusive-create lock: queries() callables may run concurrently
-        lock = Path(ix_dir + ".lock")
-        lock.parent.mkdir(parents=True, exist_ok=True)
-        import time
 
-        try:
-            fd = os.open(str(lock), os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            os.close(fd)
-            try:
-                df = generate_spark(spark, 300, seed=42)
-                # corpus sidecar FIRST (the build's corpus_stats marker is
-                # the memo gate — the sidecar must exist whenever it does):
-                # the DuckDB oracle reads these rows back to recompute the
-                # stemmed BM25 independently (see _transcripts_bm25_sql)
-                df.write.mode("overwrite").parquet(ix_dir + "/corpus.parquet")
-                store = build_index(spark, df, ix_dir, n_chunks=2)
-            finally:
-                lock.unlink(missing_ok=True)
-        except FileExistsError:
-            for _ in range(600):  # wait for the builder holding the lock
-                if store.corpus_stats_path.exists() and not lock.exists():
-                    break
-                time.sleep(1)
+    def build():
+        df = generate_spark(spark, 300, seed=42)
+        # corpus sidecar FIRST (the build's corpus_stats marker is the memo
+        # gate — the sidecar must exist whenever it does): the DuckDB
+        # oracle reads these rows back to recompute the stemmed BM25
+        # independently (see _transcripts_bm25_sql)
+        df.write.mode("overwrite").parquet(ix_dir + "/corpus.parquet")
+        build_index(spark, df, ix_dir, n_chunks=2)
+
+    _locked_build(
+        store.corpus_stats_path, Path(ix_dir + ".lock"), build, (ix_dir,)
+    )
     return store
 
 
-def _locked_build(marker: Path, lock: Path, build_fn) -> None:
+def _locked_build(marker: Path, lock: Path, build_fn, stores=()) -> None:
     """Exclusive-create build memoization: queries() callables may run
-    concurrently; exactly one process builds, the rest wait on the marker."""
-    if marker.exists():
+    concurrently; exactly one process builds, the rest wait on the marker.
+    A memoized index store in ``stores`` that the format check rejects
+    (written by an older layout) is removed and rebuilt."""
+    from search_engine_spark.index.storage import IndexStore
+
+    def stale() -> list[str]:
+        return [
+            d for d in stores
+            if Path(d).exists() and not IndexStore(d).readable()
+        ]
+
+    if marker.exists() and not stale():
         return
     lock.parent.mkdir(parents=True, exist_ok=True)
+    import shutil
     import time
 
     try:
         fd = os.open(str(lock), os.O_CREAT | os.O_EXCL | os.O_WRONLY)
         os.close(fd)
         try:
+            for d in stale():
+                shutil.rmtree(d, ignore_errors=True)
             build_fn()
         finally:
             lock.unlink(missing_ok=True)
@@ -623,8 +625,8 @@ def _docs_index(spark: SparkSession, sf_dir: str):
     from search_engine_spark.index.storage import IndexStore
 
     h = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    # _v5: term_stats carries the build-time cf column (LM serve path)
-    d = os.environ.get("SPARK_GRAFT_DIX", "/tmp/se_entry_docs_ix") + f"_v5_{h}"
+    # _v6: stores carry format_version
+    d = os.environ.get("SPARK_GRAFT_DIX", "/tmp/se_entry_docs_ix") + f"_v6_{h}"
     done = Path(d) / "_ENTRY_DONE"
 
     def build():
@@ -634,7 +636,7 @@ def _docs_index(spark: SparkSession, sf_dir: str):
         )
         done.touch()
 
-    _locked_build(done, Path(d + ".lock"), build)
+    _locked_build(done, Path(d + ".lock"), build, (d,))
     return IndexStore(d)
 
 
@@ -919,7 +921,7 @@ BOOL_QUERY = f'("{PHRASE}" AND "{PHRASE_B}") OR "{PHRASE_C}"'
 def _boolean_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nested boolean query through the FULL pipeline: the parenthesized
     tree parses to logical nodes (parser._parse_bool_tree), ALL phrase
-    leaves match in ONE adjacency-kernel pass over one pruned positional
+    leaves match in ONE adjacency-kernel pass over one pruned segment
     scan, inner nodes combine with no ordering cut, top-k at the root."""
     from search_engine_spark.query.pipeline import search
 
@@ -1040,7 +1042,7 @@ def _appended_store(spark: SparkSession, sf_dir: str):
     from search_engine_spark.streaming.incremental import append_batch
 
     h = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    d = os.environ.get("SPARK_GRAFT_AIX", "/tmp/se_entry_docs_ixapp") + f"_v3_{h}"
+    d = os.environ.get("SPARK_GRAFT_AIX", "/tmp/se_entry_docs_ixapp") + f"_v4_{h}"
     done = Path(d) / "_ENTRY_DONE"
 
     def build():
@@ -1052,7 +1054,7 @@ def _appended_store(spark: SparkSession, sf_dir: str):
         append_batch(spark, store, rest)
         done.touch()
 
-    _locked_build(done, Path(d + ".lock"), build)
+    _locked_build(done, Path(d + ".lock"), build, (d,))
     return IndexStore(d)
 
 
@@ -1067,10 +1069,10 @@ def _index_bm25_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _index_phrase_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Positional-family streaming parity (VERDICT r3 next #8): the exact
-    phrase query via the PRODUCTION kernel (candidate bitmask + adjacency
-    kernel, query/phrase.py) over the half-build + append store — appended
-    chunks' positional rows must interleave correctly with the base
-    build's. Oracle: same ``_phrase_sql`` as ``index_phrase_match``."""
+    phrase query via the PRODUCTION kernel (per-drange segment
+    intersection + adjacency kernel, query/phrase.py) over the half-build +
+    append store — appended chunks' positional streams must interleave
+    correctly with the base build's. Oracle: same ``_phrase_sql`` as ``index_phrase_match``."""
     from search_engine_spark.query.phrase import phrase_matches
 
     store = _appended_store(spark, sf_dir)
@@ -1094,7 +1096,7 @@ def _merged_store(spark: SparkSession, sf_dir: str):
     from search_engine_spark.index.storage import IndexStore
 
     h = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    d = os.environ.get("SPARK_GRAFT_MIX", "/tmp/se_entry_docs_ixmrg") + f"_v1_{h}"
+    d = os.environ.get("SPARK_GRAFT_MIX", "/tmp/se_entry_docs_ixmrg") + f"_v2_{h}"
     done = Path(d) / "_ENTRY_DONE"
 
     def build():
@@ -1107,7 +1109,7 @@ def _merged_store(spark: SparkSession, sf_dir: str):
         merge_store(spark, dst, src)
         done.touch()
 
-    _locked_build(done, Path(d + ".lock"), build)
+    _locked_build(done, Path(d + ".lock"), build, (d, d + "_src"))
     return IndexStore(d)
 
 
@@ -1152,7 +1154,7 @@ def _index_bm25_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     from search_engine_spark.query.wand import bm25_topk_wand
 
     h = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    d = os.environ.get("SPARK_GRAFT_CIX", "/tmp/se_entry_docs_ixcomp") + f"_v2_{h}"
+    d = os.environ.get("SPARK_GRAFT_CIX", "/tmp/se_entry_docs_ixcomp") + f"_v3_{h}"
     done = Path(d) / "_ENTRY_DONE"
 
     def build():
@@ -1165,7 +1167,7 @@ def _index_bm25_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
         compact(spark, store)
         done.touch()
 
-    _locked_build(done, Path(d + ".lock"), build)
+    _locked_build(done, Path(d + ".lock"), build, (d,))
     res = bm25_topk_wand(spark, IndexStore(d), _Q_TERMS, k=K)
     return res.select("doc_id", F.round("score", 6).alias("score"))
 
@@ -1321,7 +1323,7 @@ def _gram_index(spark: SparkSession, sf_dir: str) -> str:
     from search_engine_spark.query.fuzzy_index import build_gram_index
 
     h = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    d = os.environ.get("SPARK_GRAFT_GIX", "/tmp/se_entry_gram_ix") + f"_v1_{h}"
+    d = os.environ.get("SPARK_GRAFT_GIX", "/tmp/se_entry_gram_ix") + f"_v2_{h}"
     done = Path(d) / "_ENTRY_DONE"
 
     def build():

@@ -424,8 +424,9 @@ def main() -> None:
     queries, p95 = _time_query_set(spark, qstore, repeats=3)
     big_ix = f"{TMP_BASE}/bench_ix_hi"
     big_store = IndexStore(big_ix)
-    if not big_store.corpus_stats_path.exists() or not big_store.chunk_done(0):
-        # a crashed final scaling attempt can leave a partial dir — rebuild
+    if not big_store.readable() or not big_store.chunk_done(0):
+        # a crashed final scaling attempt can leave a partial dir, and an
+        # older code's store fails the format check — rebuild
         shutil.rmtree(big_ix, ignore_errors=True)
         build_index(spark, spark.read.parquet(corpus_full), big_ix, n_chunks=1)
     # at-scale query pass is window-gated like the scaling pair (VERDICT r3

@@ -77,8 +77,7 @@ def _extended_set(spark, store):
     from search_engine_spark.query.mlt import more_like_this
     from search_engine_spark.query.pipeline import search
 
-    terms = analyze_query("spark index query", stem=bool(
-        store.corpus_stats().get("stem", True)))
+    terms = analyze_query("spark index query", stem=store.corpus_stats()["stem"])
     docs = store.docs(spark)
 
     # 100-query workload: head terms + mixed tails, deterministic
@@ -124,7 +123,7 @@ def mode_queries(args) -> None:
 
     spark = _get_spark(args.cores)
     store = IndexStore(args.ix)
-    if not store.corpus_stats_path.exists() or not store.chunk_done(0):
+    if not store.readable() or not store.chunk_done(0):
         shutil.rmtree(args.ix, ignore_errors=True)
         build_index(spark, spark.read.parquet(args.corpus), args.ix, n_chunks=1)
         store = IndexStore(args.ix)

@@ -600,13 +600,3 @@ def encode_segments(
 
     return sorted_parts.mapInArrow(encode_stream, schema=SEGMENT_SCHEMA)
 
-
-def positional_postings(postings: DataFrame) -> DataFrame:
-    """Optional positional segment family (phrase queries): kept as a plain
-    columnar table ``(term, doc_id, positions array<int>)`` — mirrors the
-    reference keeping ``positions`` per posting (``Indexer.java:341``) as a
-    separate concern from the scored index."""
-    return postings.select(
-        "term", "doc_id", "tf", "doc_len", "positions",
-        term_bucket_col(F.col("term")).alias("tbucket"),
-    )

@@ -28,7 +28,7 @@ from .build import (
     encode_segments,
     term_bucket_col,
 )
-from .storage import SEGMENTS_DDL, IndexStore, _read_or_empty
+from .storage import FORMAT_VERSION, SEGMENTS_DDL, IndexStore, _read_or_empty
 
 DEFAULT_DRANGE_SPAN = 1 << 16  # postings per term per range shard bound
 DEFAULT_N_CHUNKS = 4
@@ -144,16 +144,13 @@ def build_index(
         tick("stage3 term_stats")
         store.write_corpus_stats(
             {
+                "format_version": FORMAT_VERSION,
                 "n_docs": n_docs,
                 "avgdl": corpus_avgdl,
                 "drange_span": int(drange_span),
                 "n_buckets": n_buckets,
                 "n_chunks": n_chunks,
                 "stem": stem,
-                # segment rows carry the block-skippable positional stream;
-                # phrase/logical queries serve per-drange over segments
-                # (stores built before this flag fall back to the row path)
-                "positional_segments": True,
                 "built_unix": time.time(),
             }
         )

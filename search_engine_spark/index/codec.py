@@ -332,8 +332,7 @@ def decode_postings(buf: bytes) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
 #
 # The column is self-describing and separate from the `postings` blob, so
 # the scored-segment layout (and codec MAGIC) is unchanged: WAND readers
-# never touch it (column pruning), and indexes built before this column
-# simply lack it (serve falls back to the row-level positional path).
+# never touch it (column pruning).
 #
 # Layout: n_blocks:int32 | end_offset:int32[n_blocks] (cumulative bytes
 # into the stream) | varbyte stream of raw position ordinals (per-posting

@@ -301,10 +301,6 @@ def compact(spark: SparkSession, store: IndexStore) -> dict:
 
     cstats.update(
         {"n_docs": n_docs, "avgdl": avgdl, "n_chunks": 1,
-         # the re-encode writes positional streams for every chunk, so even
-         # a store built before the positional-segment column serves the
-         # segment phrase path after compaction
-         "positional_segments": True,
          "compacted_unix": time.time()}
     )
     store.write_corpus_stats(cstats)

@@ -47,11 +47,10 @@ def merge_store(
     unstemmed index disagree on the dictionary itself."""
     dstats = dst.corpus_stats()
     sstats = src.corpus_stats()
-    if dstats.get("stem", True) != sstats.get("stem", True):
+    if dstats["stem"] != sstats["stem"]:
         raise ValueError(
             "cannot merge: analyzer mismatch "
-            f"(dst stem={dstats.get('stem', True)}, "
-            f"src stem={sstats.get('stem', True)})"
+            f"(dst stem={dstats['stem']}, src stem={sstats['stem']})"
         )
     n_buckets = int(dstats["n_buckets"])
     drange_span = int(dstats["drange_span"])

@@ -16,7 +16,11 @@ abstraction. Layout under ``index_dir``:
     segments/chunk=N/     compressed block-max segments (codec.py) — the WAND
                           path; chunked by drange for checkpoint-resume
     stats/terms/          (term, df, idf, bm25_idf, tbucket) part. by tbucket
-    stats/corpus.json     {n_docs, avgdl, drange_span, n_buckets, n_chunks}
+    stats/corpus.json     {format_version, n_docs, avgdl, drange_span,
+                          n_buckets, n_chunks, stem, built_unix
+                          [, last_append_unix, compacted_unix,
+                          last_build_secs]} — ``corpus_stats()`` rejects a
+                          store whose format_version is not FORMAT_VERSION
     manifest/chunk_N.json per-chunk lineage + metrics (A11 analog: counters
                           the reference keeps as AtomicInteger,
                           WebCrawler.java:27-29)
@@ -31,6 +35,19 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 
 
+# The one on-disk format this code reads and writes. ``build_index`` stamps
+# it into corpus.json; append, merge and compaction carry it forward. Bump
+# it when the layout changes, so a store of another format fails at its
+# first stats read instead of deep inside a kernel. Version 1: unified
+# postings table, term_stats with the build-time ``cf`` column, segments
+# with the block-skippable positional stream.
+FORMAT_VERSION = 1
+
+
+class StoreFormatError(RuntimeError):
+    """The store on disk was written in a format this code does not read."""
+
+
 # canonical artifact schemas — used only as empty-read fallbacks (a zero-doc
 # corpus writes directories with no parquet part files)
 DOCS_DDL = (
@@ -43,7 +60,6 @@ POSTINGS_DDL = (
     "doc_id long, term string, tf int, positions binary, doc_len int, "
     "importance double, tbucket int"
 )
-POSITIONS_DDL = POSTINGS_DDL
 TERM_STATS_DDL = (
     "term string, df long, cf long, idf double, bm25_idf double, tbucket int"
 )
@@ -156,11 +172,6 @@ class IndexStore:
         return str(self.dir / "postings")
 
     @property
-    def positions_path(self) -> str:
-        # the positional family lives in the unified postings table
-        return self.postings_path
-
-    @property
     def segments_path(self) -> str:
         return str(self.dir / "segments")
 
@@ -203,11 +214,6 @@ class IndexStore:
     def postings(self, spark: SparkSession) -> DataFrame:
         return _read_cached(spark, self.postings_path, POSTINGS_DDL)
 
-    def positions(self, spark: SparkSession) -> DataFrame:
-        """Positional view (phrase queries) — same unified table; kept as a
-        named reader so call sites say what they mean."""
-        return _read_cached(spark, self.positions_path, POSITIONS_DDL)
-
     def segments(self, spark: SparkSession) -> DataFrame:
         # chunk=N/tbucket=M dirs are discovered as partition columns ->
         # directory-level pruning on term lookups
@@ -217,7 +223,40 @@ class IndexStore:
         return _read_cached(spark, self.term_stats_path, TERM_STATS_DDL)
 
     def corpus_stats(self) -> dict:
-        return json.loads(self.corpus_stats_path.read_text())
+        stats = json.loads(self.corpus_stats_path.read_text())
+        found = stats.get("format_version")
+        if found != FORMAT_VERSION:
+            raise StoreFormatError(
+                f"index store {self.dir} has format_version {found!r}; this "
+                f"code reads format_version {FORMAT_VERSION}: rebuild the "
+                "index with build_index"
+            )
+        return stats
+
+    def readable(self) -> bool:
+        """Whether the store holds stats this code reads. Reuse gates over
+        memoized stores rebuild when it is False (no store yet, or one the
+        format check rejects)."""
+        try:
+            self.corpus_stats()
+        except (FileNotFoundError, StoreFormatError):
+            return False
+        return True
+
+    def stats_epoch(self) -> tuple:
+        """Key of the store's current statistics: any stats rewrite (a
+        build, a streaming append recomputing df, a compaction recounting)
+        changes it. Logical deletes do not: they leave the stats stale
+        until compaction, by design. Driver-side caches of anything derived
+        from term statistics (idf, dictionary expansions, the gram index)
+        key on it."""
+        c = self.corpus_stats()
+        return (
+            str(self.dir),
+            c.get("built_unix"),
+            c.get("last_append_unix"),
+            c.get("compacted_unix"),
+        )
 
     def write_corpus_stats(self, stats: dict) -> None:
         self.corpus_stats_path.parent.mkdir(parents=True, exist_ok=True)

@@ -102,7 +102,7 @@ def batch_bm25_topk(
     like the single-query path."""
     qterms = analyze_queries(spark, queries, stem=stem)
 
-    n_buckets = int(store.corpus_stats().get("n_buckets", 64))
+    n_buckets = store.corpus_stats()["n_buckets"]
     avgdl = float(store.corpus_stats()["avgdl"])
 
     cols = ["term", "doc_id", "tf", "doc_len"]

@@ -75,14 +75,13 @@ def candidates_for_terms(
     index point-lookups (``QueryProcessor.java:533``) + J1 union-merge.
     ``with_importance`` additionally reads the stored role-weight column
     (kept opt-in so the un-boosted path's scan stays column-pruned).
-    ``with_cf`` additionally reads the build-time collection frequency when
-    the store has it (LM scoring; absent on pre-cf indexes — the caller
-    must check for the column)."""
+    ``with_cf`` additionally reads the build-time collection frequency
+    (LM scoring)."""
     if not terms:
         return None
     # bucket count from the store's stats, not the module default — an index
     # built with a different n_buckets would otherwise prune wrong dirs
-    n_buckets = int(store.corpus_stats().get("n_buckets", 64))
+    n_buckets = store.corpus_stats()["n_buckets"]
     qtf = Counter(terms)
     uniq = sorted(qtf)
     buckets = sorted({term_bucket_py(t, n_buckets) for t in uniq})
@@ -98,7 +97,7 @@ def candidates_for_terms(
     )
     stats = store.term_stats(spark)
     stat_cols = ["term", "df", "idf", "bm25_idf"]
-    if with_cf and "cf" in stats.columns:
+    if with_cf:
         stat_cols.append("cf")
     stats = (
         stats

@@ -92,5 +92,5 @@ def explain_query(
     store's own analyzer config, duplicates keeping their query-tf)."""
     from ..analysis.analyzer import analyze
 
-    stem = bool(store.corpus_stats().get("stem", True))
+    stem = store.corpus_stats()["stem"]
     return explain_topk(spark, store, analyze(query, stem=stem), k=k, engine=engine)

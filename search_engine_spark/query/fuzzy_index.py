@@ -67,20 +67,15 @@ def _meta_path(index_dir: str) -> Path:
     return Path(index_dir) / "meta.json"
 
 
-def _store_epoch(store: IndexStore) -> list:
-    """Stats epoch the index was built against — same key the expansion
-    memo and WAND idf cache use. Any dictionary rewrite (append recomputes
-    df, compaction recounts) changes it; logical deletes do not (they
-    leave term_stats untouched until compaction, by design)."""
+def _store_epoch(store: IndexStore) -> list | None:
+    """``IndexStore.stats_epoch`` as a JSON-comparable stamp (None for a
+    store without stats). Any dictionary rewrite (append recomputes df,
+    compaction recounts) changes it; logical deletes do not (they leave
+    term_stats untouched until compaction, by design)."""
     try:
-        c = store.corpus_stats()
+        return list(store.stats_epoch())
     except FileNotFoundError:
-        return [None, None, None]
-    return [
-        c.get("built_unix"),
-        c.get("last_append_unix"),
-        c.get("compacted_unix"),
-    ]
+        return None
 
 
 def gram_index_for(

@@ -17,10 +17,7 @@ scalar computed at BUILD time (``index.build.build_term_stats`` folds a
 ``sum(tf)`` into the job that already computes df) and read from the
 broadcast term_stats join like ``bm25_idf`` — zero query-time shuffles
 beyond BM25's own; the per-doc fold reuses the sorted-term
-conditional-sum kernel so scores are deterministic bit-for-bit. Stores
-built before the cf column fall back to a window over the pruned scan
-(one partition per query term — correct, but skew-prone at head terms;
-rebuild or compact to upgrade).
+conditional-sum kernel so scores are deterministic bit-for-bit.
 """
 
 from __future__ import annotations
@@ -49,33 +46,17 @@ def lm_dirichlet_topk(
     cstats = store.corpus_stats()
     total_tokens = float(cstats["n_docs"]) * float(cstats["avgdl"])
 
-    if "cf" in cand.columns:
-        # build-time collection frequency, broadcast with the stats join:
-        # integer-exact (sum of tf), bit-identical to the window sum below
-        scored = cand.withColumn("cf", F.col("cf").cast("double"))
-    else:
-        # pre-cf store: window-sum over the term partition — the pruned
-        # posting scan is read once, but every posting of a query term
-        # lands in ONE window partition (skewed at head terms; kept only
-        # as the legacy-store fallback). Integer tf sums are exact in
-        # doubles, so partition order cannot perturb cf.
-        from pyspark.sql import Window
-
-        scored = cand.withColumn(
-            "cf",
-            F.sum(F.col("tf").cast("double")).over(Window.partitionBy("term")),
-        )
-
     tf = F.col("tf").cast("double")
     dl = F.col("doc_len").cast("double")
-    p_c = F.col("cf") / F.lit(total_tokens)
+    # build-time collection frequency, broadcast with the stats join
+    p_c = F.col("cf").cast("double") / F.lit(total_tokens)
     term_score = F.col("qtf") * (
         F.log(F.lit(1.0) + tf / (F.lit(mu) * p_c))
         + F.log(F.lit(mu) / (dl + F.lit(mu)))
     )
     cols, fold = _per_term_sum(sorted(set(terms)))
     agg = (
-        scored.withColumn("term_score", term_score)
+        cand.withColumn("term_score", term_score)
         .groupBy("doc_id")
         .agg(*cols)
         .select("doc_id", fold.alias("score"))

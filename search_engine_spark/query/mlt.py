@@ -44,8 +44,8 @@ def mlt_terms(
     out via the stats inner join, like Lucene MLT skipping terms below
     minDocFreq."""
     cstats = store.corpus_stats()
-    stem = bool(cstats.get("stem", True))
-    n_buckets = int(cstats.get("n_buckets", 64))
+    stem = cstats["stem"]
+    n_buckets = cstats["n_buckets"]
 
     src = (
         store.docs(spark)

@@ -1,4 +1,4 @@
-"""Exact-phrase matching over the positional index (J2 + J3).
+"""Exact-phrase matching over the positional segments (J2 + J3).
 
 The reference intersects posting doc-sets term-by-term
 (``QueryProcessor.java:150-178``) then checks positional adjacency per doc
@@ -7,23 +7,26 @@ contain p+i-1). Positions are ordinals over the surviving analyzed stream
 (``Indexer.java:231-247``), so "fast key" matches even when a stopword stood
 between the two words in the raw text — semantics preserved here.
 
-Spark plan (the 100 TB shape):
+Spark plan (the 100 TB shape), shared by single phrases, the phrase leaves
+of logical queries and the NEAR operators (proximity.py):
 
-1. **candidate intersection on the COMPACT postings** (tbucket-pruned; the
-   fat positions column never read): docs containing ALL phrase terms —
-   the reference's doc-set intersection, done before any position is
-   touched.
-2. **one hash repartition by doc_id** of the candidates' position rows
-   (still varbyte blobs — nothing inflated crosses the shuffle).
-3. **vectorized adjacency kernel** (Arrow-batched mapInPandas): decode every
-   blob in the batch with ONE varbyte call (streams concatenate), build
-   int64 keys ``doc_id << 21 | pos``, and chain ``np.isin`` set-membership
-   per phrase offset — no per-doc Python, no exploded-position rows, no
-   (doc_id, start) JVM join cascade. Output is one row per matching doc.
+1. **pruned columnar scan of the terms' segment rows** (``segment_scan``:
+   tbucket partition dirs + pushed term filter): per (term, drange) the
+   compressed docID/tf/dl blob and its block-skippable positional stream
+   (``codec.PositionalSegment``).
+2. **one shuffle of those blobs grouped by drange** — a few MB of
+   compressed bytes, never per-posting rows.
+3. **per-range kernel** (applyInPandas): intersect the compact docID
+   streams first — the reference's doc-set intersection, done before any
+   position is touched — then decode ONLY the positional blocks holding a
+   candidate, build int64 keys ``doc_id << 21 | pos`` and chain
+   membership probes per phrase offset — no per-doc Python. Output is one
+   row per matching doc.
 
-An earlier revision exploded positions into rows and equi-joined on
-(doc_id, pos - i); correct, but at a 3.9M-turn index the explode+join
-pipeline measured ~9.5 s per phrase query vs ~2-4 s for this plan.
+Scoring (``score_phrase_matches``) counts the synthetic phrase term's df
+over every segment match and only then drops tombstoned docs: between a
+delete and its compaction ``n_docs`` and term df still count the deleted
+docs, so the phrase df must count them too.
 """
 
 from __future__ import annotations
@@ -38,223 +41,6 @@ from ..index.storage import IndexStore
 # positions are ordinals within a doc; doc_len < 2^21 leaves 42 bits of
 # docID headroom in the composite int64 key
 _POS_BITS = 21
-
-
-def _n_pos_buckets(store: IndexStore) -> int:
-    """Positions bucket count from corpus stats (older indexes predate the
-    field and used the postings count)."""
-    cstats = store.corpus_stats()
-    return int(cstats.get("n_pos_buckets", cstats.get("n_buckets", 64)))
-
-
-def _term_bitmask_expr(all_terms: list[str]) -> F.Column:
-    """CASE mapping each term to its bit (terms are a tiny query-sized
-    set). bit_or of this per doc gives the doc's term-presence mask in ONE
-    plain hash aggregation — a conditional count_distinct here cost a
-    distinct-expand of the whole posting scan (measured 4.5 s of a 6 s
-    logical query at the 3.9M-turn index; the bitmask agg is <1 s)."""
-    expr = None
-    for i, t in enumerate(all_terms):
-        expr = (
-            F.when(F.col("term") == t, F.lit(1 << i))
-            if expr is None
-            else expr.when(F.col("term") == t, F.lit(1 << i))
-        )
-    return expr.otherwise(F.lit(0))
-
-
-def candidate_docs(
-    spark: SparkSession, store: IndexStore, terms: list[str]
-) -> DataFrame:
-    """Docs containing ALL the given terms — computed on the COMPACT
-    postings family (tbucket-pruned). The classic IR order of operations:
-    intersect doc sets first, fetch/decode positions only for survivors."""
-    return candidate_docs_any(spark, store, [terms])
-
-
-def candidate_docs_any(
-    spark: SparkSession, store: IndexStore, term_sets: list[list[str]]
-) -> DataFrame:
-    """Docs containing ALL terms of ANY of the given term sets — the
-    candidate pool of a phrase or logical query, computed in ONE pruned
-    postings scan + ONE bitmask aggregation (no per-side scans, no
-    union+distinct, no count_distinct expand)."""
-    from ..index.build import term_bucket_py
-
-    sets = [sorted(set(ts)) for ts in term_sets if ts]
-    all_terms = sorted({t for ts in sets for t in ts})
-    # bucket count comes from the STORE's corpus stats, not the module
-    # default — an index built with n_buckets != 64 would otherwise prune
-    # the wrong partition dirs and silently return empty matches
-    n_buckets = _n_pos_buckets(store)
-    buckets = sorted({term_bucket_py(t, n_buckets) for t in all_terms})
-    bit_of = {t: 1 << i for i, t in enumerate(all_terms)}
-    g = (
-        store.postings(spark)
-        .filter(F.col("tbucket").isin(buckets))
-        .filter(F.col("term").isin(all_terms))
-        .select("doc_id", _term_bitmask_expr(all_terms).alias("_bit"))
-        .groupBy("doc_id")
-        .agg(F.bit_or("_bit").alias("_mask"))
-    )
-    cond = None
-    for ts in sets:
-        side_mask = 0
-        for t in ts:
-            side_mask |= bit_of[t]
-        c = F.col("_mask").bitwiseAND(F.lit(side_mask)) == side_mask
-        cond = c if cond is None else (cond | c)
-    return g.filter(cond).select("doc_id")
-
-
-def positions_for(
-    spark: SparkSession,
-    store: IndexStore,
-    terms: list[str],
-    candidates: DataFrame | None = None,
-) -> DataFrame:
-    """Pruned scan of the positional rows for a term set, optionally
-    restricted (left-semi) to candidate doc_ids — blobs stay encoded."""
-    from ..index.build import term_bucket_py
-
-    n_pos = _n_pos_buckets(store)
-    uniq = sorted(set(terms))
-    buckets = sorted({term_bucket_py(t, n_pos) for t in uniq})
-    rows = (
-        store.positions(spark)
-        .filter(F.col("tbucket").isin(buckets))  # directory pruning
-        .filter(F.col("term").isin(uniq))
-        .select("term", "doc_id", "tf", "doc_len", "positions")
-    )
-    if candidates is not None:
-        rows = rows.join(candidates, "doc_id", "left_semi")
-    return rows
-
-
-def _match_kernel_multi(sides: list[list[str]]):
-    """mapInPandas kernel over doc_id-partitioned position rows: emits
-    (side, doc_id, phrase_count, doc_len) for each side (an exact phrase)
-    matched in the batch. Adjacency is fully vectorized; a doc's rows never
-    split across workers (hash partition on doc_id) and batch splits are
-    handled by carrying the trailing doc's rows into the next batch.
-
-    All sides of a logical query are matched in ONE pass over the shared
-    position rows: each row's varbyte blob is decoded at most ONCE even
-    when both sides use it (r3 ran one kernel pass per side over an eagerly
-    checkpointed superset — two decodes, plus a full materialization of the
-    position rows; at the 3.9M-turn index that checkpoint was the dominant
-    cost of a logical query)."""
-    all_terms = sorted({t for ts in sides for t in ts})
-    code_of = {t: i for i, t in enumerate(all_terms)}
-    n_codes = len(all_terms)
-    side_codes = [[code_of[t] for t in ts] for ts in sides]  # phrase order
-    side_sets = [np.array(sorted(set(cs)), dtype=np.int64) for cs in side_codes]
-
-    from ..index.codec import varbyte_decode
-
-    def match(batches):
-        def process(pdf: pd.DataFrame):
-            # the pos_rows superset may carry terms of other sides only
-            pdf = pdf[pdf["term"].isin(code_of)]
-            if len(pdf) == 0:
-                return None
-            ids = pdf["doc_id"].to_numpy(np.int64)
-            tfs = pdf["tf"].to_numpy(np.int64)
-            dls = pdf["doc_len"].to_numpy(np.int64)
-            codes = pdf["term"].map(code_of).to_numpy(np.int64)
-            order = np.argsort(ids, kind="stable")
-            ids_s, tfs_s, codes_s, dls_s = (
-                ids[order], tfs[order], codes[order], dls[order],
-            )
-            # per-doc term-presence matrix: rows are (term, doc) unique, so
-            # side s qualifies a doc iff all of s's codes are present
-            uniq_ids = np.unique(ids_s)
-            doc_idx = np.searchsorted(uniq_ids, ids_s)
-            pres = np.zeros((uniq_ids.size, n_codes), dtype=bool)
-            pres[doc_idx, codes_s] = True
-            keep_any = np.zeros(ids_s.size, dtype=bool)
-            side_row_masks = []
-            for cs in side_sets:
-                rmask = pres[:, cs].all(axis=1)[doc_idx] & np.isin(codes_s, cs)
-                side_row_masks.append(rmask)
-                keep_any |= rmask
-            if not keep_any.any():
-                return None
-            kept_idx = np.nonzero(keep_any)[0]
-            ids_k, tfs_k = ids_s[kept_idx], tfs_s[kept_idx]
-            # ONE varbyte decode for every kept row (streams concatenate);
-            # rows used by both sides decode once
-            pos_sorted = pdf["positions"].to_numpy()[order]
-            blob = b"".join(bytes(pos_sorted[i]) for i in kept_idx)
-            pos = varbyte_decode(blob, int(tfs_k.sum()))
-            # margin of 64 keeps starts + i (i < phrase length) from
-            # carrying across the doc_id bit boundary too
-            if pos.size and int(pos.max()) >= (1 << _POS_BITS) - 64:
-                # a position overflowing into the doc_id bits would corrupt
-                # the composite key silently — fail loudly instead (docs are
-                # single transcript turns; 2M tokens in one turn means the
-                # corpus, not the kernel, is broken)
-                raise ValueError(
-                    f"position {int(pos.max())} >= 2^{_POS_BITS} - 64; "
-                    "doc too long for the composite phrase key"
-                )
-            row_of = np.repeat(np.arange(kept_idx.size), tfs_k)
-            key_all = (ids_k[row_of] << _POS_BITS) | pos
-            kcode_all = codes_s[kept_idx][row_of]
-            # doc_len lookup over the batch's docs (first row per doc)
-            first = np.concatenate(([True], ids_s[1:] != ids_s[:-1]))
-            dl_ids, dl_dls = ids_s[first], dls_s[first]
-            outs = []
-            for si, cs in enumerate(side_codes):
-                pmask = side_row_masks[si][kept_idx][row_of]
-                key = key_all[pmask]
-                kc = kcode_all[pmask]
-                per_code = {c: key[kc == c] for c in set(cs)}
-                # chain: start positions from term 0, each next term must
-                # have a position at start + i (same doc -> same key block)
-                starts = per_code[cs[0]]
-                for i, c in enumerate(cs[1:], start=1):
-                    if starts.size == 0:
-                        break
-                    starts = starts[np.isin(starts + i, per_code[c])]
-                if starts.size == 0:
-                    continue
-                mdoc, mcnt = np.unique(starts >> _POS_BITS, return_counts=True)
-                dl_idx = np.searchsorted(dl_ids, mdoc)
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "side": np.full(mdoc.size, si, dtype=np.int32),
-                            "doc_id": mdoc,
-                            "phrase_count": mcnt.astype(np.int64),
-                            "doc_len": dl_dls[dl_idx].astype(np.int64),
-                        }
-                    )
-                )
-            if not outs:
-                return None
-            return pd.concat(outs, ignore_index=True)
-
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if len(pdf) == 0:
-                continue
-            last = pdf["doc_id"].iloc[-1]
-            tail = pdf["doc_id"] == last
-            carry = pdf[tail]
-            body = pdf[~tail]
-            if len(body):
-                out = process(body)
-                if out is not None:
-                    yield out
-        if carry is not None and len(carry):
-            out = process(carry)
-            if out is not None:
-                yield out
-
-    return match
 
 
 def _in_sorted(values: np.ndarray, table: np.ndarray) -> np.ndarray:
@@ -344,12 +130,6 @@ def decode_segment_parts(pdf: pd.DataFrame) -> dict[str, list[dict]]:
 
     per_term: dict[str, list] = {}
     for t, pb, xb in zip(pdf["term"], pdf["postings"], pdf["positions"]):
-        if xb is None:
-            raise ValueError(
-                "segment row lacks a positional stream (chunk written "
-                "before the positional-segment column) — compact or "
-                "rebuild the index to serve phrases from segments"
-            )
         per_term.setdefault(t, []).append((bytes(pb), bytes(xb)))
     parts_of: dict[str, list[dict]] = {}
     for t, lst in per_term.items():
@@ -373,7 +153,7 @@ def _seg_kernel(sides: list[list[str]]):
     contains a candidate — the per-block skip directory
     (``codec.PositionalSegment``) turns the rest of the positions stream
     into byte-range skips. Emits (side, doc_id, phrase_count, doc_len) per
-    matched side, identical to the row kernel ``_match_kernel_multi``."""
+    matched side."""
     side_sets = [sorted(set(ts)) for ts in sides]
 
     empty = pd.DataFrame(
@@ -395,8 +175,8 @@ def _seg_kernel(sides: list[list[str]]):
             return np.concatenate([p["ids"] for p in ps])
 
         # candidate docs per side: docs containing ALL the side's terms —
-        # the classic intersect-before-positions order, here on in-memory
-        # sorted id arrays instead of a distributed bitmask aggregation
+        # the classic intersect-before-positions order, on in-memory
+        # sorted id arrays
         side_cands: list[np.ndarray] = []
         for ss in side_sets:
             if any(t not in parts_of for t in ss):
@@ -463,128 +243,80 @@ def _seg_kernel(sides: list[list[str]]):
     return shard
 
 
-def phrase_matches_multi_segments(
-    spark: SparkSession, store: IndexStore, sides: list[list[str]]
+def segment_scan(
+    spark: SparkSession, store: IndexStore, terms: list[str]
 ) -> DataFrame:
-    """Segment-serve phrase/logical matching (the 100 TB plan): pruned
-    columnar scan of the query terms' segment rows (tbucket partition dirs +
-    pushed term filter), ONE shuffle of the compressed per-(term, drange)
-    blobs grouped by drange — a few MB where the row path shuffled millions
-    of per-(term, doc) rows — then the block-skipping adjacency kernel per
-    doc range. Same output contract as ``phrase_matches_multi``."""
+    """Pruned columnar scan of the terms' segment rows: tbucket partition
+    dirs (the STORE's bucket count) + pushed term filter, reading the
+    scored blob and the positional stream. Shared by the phrase/logical and
+    proximity kernels, which group it by drange."""
     from ..index.build import term_bucket_py
-    from ..index.deletes import live_filter
 
-    cstats = store.corpus_stats()
-    n_buckets = int(cstats.get("n_buckets", 64))
-    all_terms = sorted({t for ts in sides for t in ts})
-    buckets = sorted({term_bucket_py(t, n_buckets) for t in all_terms})
-    segs = (
+    n_buckets = store.corpus_stats()["n_buckets"]
+    uniq = sorted(set(terms))
+    buckets = sorted({term_bucket_py(t, n_buckets) for t in uniq})
+    return (
         store.segments(spark)
         .filter(F.col("tbucket").isin(buckets))
-        .filter(F.col("term").isin(all_terms))
+        .filter(F.col("term").isin(uniq))
         .select("term", "drange", "postings", "positions")
     )
-    matched = segs.groupBy("drange").applyInPandas(
-        _seg_kernel(sides),
-        schema="side int, doc_id long, phrase_count long, doc_len long",
-    )
-    return live_filter(spark, store, matched)
-
-
-def partition_pos_rows(spark: SparkSession, rows: DataFrame) -> DataFrame:
-    """Hash-partition position rows by doc_id and sort within partitions —
-    the layout ``_match_kernel`` requires. Exposed so a logical query can
-    lay out the SHARED superset once (before localCheckpoint) and both
-    phrase sides skip their own repartition+sort."""
-    n_parts = spark.sparkContext.defaultParallelism
-    return rows.repartition(n_parts, "doc_id").sortWithinPartitions("doc_id")
 
 
 def phrase_matches_multi(
-    spark: SparkSession,
-    store: IndexStore,
-    sides: list[list[str]],
-    pos_rows: DataFrame | None = None,
-    pos_rows_partitioned: bool = False,
+    spark: SparkSession, store: IndexStore, sides: list[list[str]]
 ) -> DataFrame:
     """Match SEVERAL exact phrases in one kernel pass ->
     (side, doc_id, phrase_count, doc_len), side = index into ``sides``.
 
-    This is the logical-query serve path. Indexes whose segments carry the
-    block-skippable positional stream (``corpus_stats.positional_segments``)
-    serve straight from the compressed segments — pruned columnar scan, one
-    tiny per-drange blob shuffle, block-skipped decode. Older stores fall
-    back to the row path: one pruned positional row scan for the union of
-    all sides' terms, one doc_id layout, one decode."""
-    from ..index.deletes import live_filter
-
-    if pos_rows is None and store.corpus_stats().get("positional_segments"):
-        return phrase_matches_multi_segments(spark, store, sides)
-    if pos_rows is None:
-        all_terms = sorted({t for ts in sides for t in ts})
-        pos_rows = positions_for(
-            spark, store, all_terms,
-            candidates=candidate_docs_any(spark, store, sides),
-        )
-        pos_rows_partitioned = False  # fresh scan always needs the layout
-    # The doc_id partition+sort is LOAD-BEARING: the kernel requires a
-    # doc's rows to be contiguous in the partition stream (its carry only
-    # saves the batch's trailing doc_id). A doc's term-rows arrive from
-    # different tbucket scan tasks, so after a hash shuffle alone they sit
-    # in different fetched blocks; once a partition spans multiple Arrow
-    # batches an unsorted doc would be split across non-adjacent batches
-    # and its matches silently dropped (tests/test_phrase_kernel.py).
-    if not pos_rows_partitioned:
-        pos_rows = partition_pos_rows(spark, pos_rows)
-    matched = pos_rows.mapInPandas(
-        _match_kernel_multi(sides),
+    The logical-query serve path: ONE pruned segment scan for the union of
+    all sides' terms, one per-drange kernel pass, each positional block
+    decoded at most once. Tombstoned docs are NOT dropped here: the match
+    set feeds ``score_phrase_matches``, which counts df over it first."""
+    scan = segment_scan(spark, store, [t for ts in sides for t in ts])
+    return scan.groupBy("drange").applyInPandas(
+        _seg_kernel(sides),
         schema="side int, doc_id long, phrase_count long, doc_len long",
     )
-    return live_filter(spark, store, matched)
 
 
-def phrase_matches(
-    spark: SparkSession,
-    store: IndexStore,
-    terms: list[str],
-    pos_rows: DataFrame | None = None,
-    pos_rows_partitioned: bool = False,
+def _phrase_matches_all(
+    spark: SparkSession, store: IndexStore, terms: list[str]
 ) -> DataFrame:
-    """Docs containing the exact phrase -> (doc_id, phrase_count, doc_len).
-
-    ``phrase_count`` = number of distinct start positions (the reference's
-    matchCount, ``QueryProcessor.java:259-268``). ``pos_rows`` optionally
-    supplies an already-pruned position-row superset;
-    ``pos_rows_partitioned=True`` promises it is already doc_id-partitioned
-    AND doc_id-sorted (``partition_pos_rows``)."""
+    """(doc_id, phrase_count, doc_len) of every doc holding the phrase,
+    tombstoned docs included."""
     if not terms:
-        return spark.createDataFrame([], "doc_id long, phrase_count long, doc_len long")
-    from ..index.deletes import live_filter
-
-    if pos_rows is None and len(terms) == 1:
+        return spark.createDataFrame(
+            [], "doc_id long, phrase_count long, doc_len long"
+        )
+    if len(terms) == 1:
         # single term: tf IS the match count — serve straight from the
         # compact postings row, no decode needed
         from ..index.build import term_bucket_py
 
-        only = (
-            store.positions(spark)
-            .filter(F.col("tbucket") == term_bucket_py(terms[0], _n_pos_buckets(store)))
+        n_buckets = store.corpus_stats()["n_buckets"]
+        return (
+            store.postings(spark)
+            .filter(F.col("tbucket") == term_bucket_py(terms[0], n_buckets))
             .filter(F.col("term") == terms[0])
-        )
-        return live_filter(
-            spark,
-            store,
-            only.select(
+            .select(
                 "doc_id",
                 F.col("tf").cast("long").alias("phrase_count"),
                 "doc_len",
-            ),
+            )
         )
-    return phrase_matches_multi(
-        spark, store, [terms], pos_rows=pos_rows,
-        pos_rows_partitioned=pos_rows_partitioned,
-    ).drop("side")
+    return phrase_matches_multi(spark, store, [terms]).drop("side")
+
+
+def phrase_matches(
+    spark: SparkSession, store: IndexStore, terms: list[str]
+) -> DataFrame:
+    """Live docs containing the exact phrase -> (doc_id, phrase_count,
+    doc_len). ``phrase_count`` = number of distinct start positions (the
+    reference's matchCount, ``QueryProcessor.java:259-268``)."""
+    from ..index.deletes import live_filter
+
+    return live_filter(spark, store, _phrase_matches_all(spark, store, terms))
 
 
 def score_phrase_matches(
@@ -596,8 +328,14 @@ def score_phrase_matches(
     """BM25-score a phrase match set as a synthetic term (the reference
     builds a synthetic term with its own tf/idf/importance,
     ``QueryProcessor.java:275-355,459-472``): tf = phrase_count,
-    df = |matching docs|."""
+    df = |matching docs|.
+
+    ``matches`` is the kernel's full match set, tombstoned docs included:
+    df is counted over it against the same (compaction-stale) ``n_docs``
+    every other term's df is, and tombstoned docs are dropped from the
+    scored rows afterwards — never returned."""
     from ..index.codec import BM25_B, BM25_K1
+    from ..index.deletes import live_filter
 
     cstats = store.corpus_stats()
     n_docs, avgdl = cstats["n_docs"], cstats["avgdl"]
@@ -616,7 +354,10 @@ def score_phrase_matches(
     impact = tf * (BM25_K1 + 1.0) / (
         tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / avgdl)
     )
-    scored = matches.withColumn("score", idf * impact).select("doc_id", "score")
+    scored = live_filter(
+        spark, store,
+        matches.withColumn("score", idf * impact).select("doc_id", "score"),
+    )
     if k is None:
         return scored
     return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
@@ -627,12 +368,8 @@ def phrase_topk(
     store: IndexStore,
     terms: list[str],
     k: int | None = 10,
-    pos_rows: DataFrame | None = None,
-    pos_rows_partitioned: bool = False,
 ) -> DataFrame:
     """Top-k BM25 synthetic-term scoring of one exact phrase."""
-    matches = phrase_matches(
-        spark, store, terms, pos_rows=pos_rows,
-        pos_rows_partitioned=pos_rows_partitioned,
+    return score_phrase_matches(
+        spark, store, _phrase_matches_all(spark, store, terms), k=k
     )
-    return score_phrase_matches(spark, store, matches, k=k)

@@ -35,16 +35,11 @@ _RESULT_COLS = [f.split()[0] for f in _RESULT_DDL.split(", ")]
 def _score_side(
     spark: SparkSession, store: IndexStore, pq: ParsedQuery, engine: str,
     k: int | None,
-    pos_rows: DataFrame | None = None,
-    pos_rows_partitioned: bool = False,
     prefix_limit: int = 8,
     terms_override: list[str] | None = None,
 ) -> DataFrame:
     if pq.kind == "phrase":
-        return phrase_topk(
-            spark, store, pq.terms or [], k=k, pos_rows=pos_rows,
-            pos_rows_partitioned=pos_rows_partitioned,
-        )
+        return phrase_topk(spark, store, pq.terms or [], k=k)
     terms = (
         _expand_terms(spark, store, pq, prefix_limit)
         if terms_override is None
@@ -127,17 +122,17 @@ def search(
     # the query MUST be analyzed with the same analyzer the index was built
     # with (a stemmed query against a no-stem index misses every inflected
     # term) — the store records its mode in corpus stats
-    stem = bool(store.corpus_stats().get("stem", True))
+    stem = store.corpus_stats()["stem"]
     pq = parse_query(query, stem=stem)
     fetch_k = k if not blend_popularity else max(4 * k, 50)
     expanded: list[str] | None = None  # dictionary expansions, if any
     if pq.kind == "logical":
         # binary (the reference's Q4 shape) OR a nested boolean tree
         # (parser._parse_bool_tree). Either way: ALL phrase leaves share
-        # ONE pruned positional scan, ONE doc_id layout, and ONE
-        # adjacency-kernel pass (each blob decoded at most once); only the
-        # tiny match set is checkpointed. localCheckpoint (not persist):
-        # query-scoped, GC-reclaimed, no CacheManager entry leaked.
+        # ONE pruned segment scan and ONE per-drange kernel pass (each
+        # positional block decoded at most once); only the tiny match set
+        # is checkpointed. localCheckpoint (not persist): query-scoped,
+        # GC-reclaimed, no CacheManager entry leaked.
         # Inner tree nodes combine with k=None (no ordering exchange);
         # only the root takes the top-k cut.
         leaves = _logical_leaves(pq)

@@ -31,12 +31,14 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..index.deletes import live_filter
 from ..index.storage import IndexStore
 from .phrase import (
     _POS_BITS,
     decode_segment_parts,
     gather_candidate_keys,
     score_phrase_matches,
+    segment_scan,
 )
 
 # gather_candidate_keys guarantees pos < 2^_POS_BITS - 64, so a window up
@@ -109,6 +111,26 @@ def _near_kernel(term_a: str, term_b: str, window: int):
     return shard
 
 
+def _near_all(
+    spark: SparkSession,
+    store: IndexStore,
+    term_a: str,
+    term_b: str,
+    window: int,
+) -> DataFrame:
+    """Every segment match of ``term_a NEAR/window term_b``, tombstoned docs
+    included (the df ``score_phrase_matches`` counts)."""
+    if term_a == term_b:
+        raise ValueError("NEAR requires two distinct analyzed terms")
+    if not (1 <= int(window) <= MAX_WINDOW):
+        raise ValueError(f"NEAR window must be in [1, {MAX_WINDOW}]")
+    scan = segment_scan(spark, store, [term_a, term_b])
+    return scan.groupBy("drange").applyInPandas(
+        _near_kernel(term_a, term_b, int(window)),
+        schema="doc_id long, pair_count long, doc_len long",
+    )
+
+
 def near_matches(
     spark: SparkSession,
     store: IndexStore,
@@ -119,28 +141,9 @@ def near_matches(
     """Docs where ``term_a`` and ``term_b`` (analyzed terms) co-occur
     within ``window`` positions: (doc_id, pair_count, doc_len), tombstone-
     filtered. Served entirely from the segment family — see module doc."""
-    from ..index.build import term_bucket_py
-    from ..index.deletes import live_filter
-
-    if term_a == term_b:
-        raise ValueError("NEAR requires two distinct analyzed terms")
-    if not (1 <= int(window) <= MAX_WINDOW):
-        raise ValueError(f"NEAR window must be in [1, {MAX_WINDOW}]")
-    cstats = store.corpus_stats()
-    n_buckets = int(cstats.get("n_buckets", 64))
-    terms = sorted({term_a, term_b})
-    buckets = sorted({term_bucket_py(t, n_buckets) for t in terms})
-    segs = (
-        store.segments(spark)
-        .filter(F.col("tbucket").isin(buckets))
-        .filter(F.col("term").isin(terms))
-        .select("term", "drange", "postings", "positions")
+    return live_filter(
+        spark, store, _near_all(spark, store, term_a, term_b, window)
     )
-    matched = segs.groupBy("drange").applyInPandas(
-        _near_kernel(term_a, term_b, int(window)),
-        schema="doc_id long, pair_count long, doc_len long",
-    )
-    return live_filter(spark, store, matched)
 
 
 def _near_chain_kernel(terms: list[str], window: int):
@@ -219,6 +222,25 @@ def _near_chain_kernel(terms: list[str], window: int):
     return shard
 
 
+def _near_chain_all(
+    spark: SparkSession,
+    store: IndexStore,
+    terms: list[str],
+    window: int,
+) -> DataFrame:
+    """Every segment match of the ordered span chain, tombstoned docs
+    included (the df ``score_phrase_matches`` counts)."""
+    if len(terms) < 2 or len(set(terms)) != len(terms):
+        raise ValueError("NEAR chain requires >=2 distinct analyzed terms")
+    if not (1 <= int(window) <= MAX_WINDOW):
+        raise ValueError(f"NEAR window must be in [1, {MAX_WINDOW}]")
+    scan = segment_scan(spark, store, terms)
+    return scan.groupBy("drange").applyInPandas(
+        _near_chain_kernel(list(terms), int(window)),
+        schema="doc_id long, chain_count long, doc_len long",
+    )
+
+
 def near_chain_matches(
     spark: SparkSession,
     store: IndexStore,
@@ -230,28 +252,9 @@ def near_chain_matches(
     filtered. Same pruned-scan + per-drange-kernel plan as ``near_matches``
     — scan cost grows with the terms' posting sizes, kernel cost with the
     candidate intersection, never with corpus size."""
-    from ..index.build import term_bucket_py
-    from ..index.deletes import live_filter
-
-    if len(terms) < 2 or len(set(terms)) != len(terms):
-        raise ValueError("NEAR chain requires >=2 distinct analyzed terms")
-    if not (1 <= int(window) <= MAX_WINDOW):
-        raise ValueError(f"NEAR window must be in [1, {MAX_WINDOW}]")
-    cstats = store.corpus_stats()
-    n_buckets = int(cstats.get("n_buckets", 64))
-    tsorted = sorted(set(terms))
-    buckets = sorted({term_bucket_py(t, n_buckets) for t in tsorted})
-    segs = (
-        store.segments(spark)
-        .filter(F.col("tbucket").isin(buckets))
-        .filter(F.col("term").isin(tsorted))
-        .select("term", "drange", "postings", "positions")
+    return live_filter(
+        spark, store, _near_chain_all(spark, store, terms, window)
     )
-    matched = segs.groupBy("drange").applyInPandas(
-        _near_chain_kernel(list(terms), int(window)),
-        schema="doc_id long, chain_count long, doc_len long",
-    )
-    return live_filter(spark, store, matched)
 
 
 def near_chain_topk(
@@ -264,7 +267,7 @@ def near_chain_topk(
     """Top-k ordered-chain docs scored like a synthetic phrase term (BM25
     with tf = chain_count, df = |matching docs|) — identical scoring shape
     to ``near_topk`` and the phrase path."""
-    matches = near_chain_matches(spark, store, terms, window).select(
+    matches = _near_chain_all(spark, store, terms, window).select(
         "doc_id",
         F.col("chain_count").alias("phrase_count"),
         "doc_len",
@@ -283,7 +286,7 @@ def near_topk(
     """Top-k NEAR/w docs scored like a synthetic phrase term (BM25 with
     tf = pair_count, df = |matching docs|) — the same scoring the phrase
     path applies to exact-adjacency matches."""
-    matches = near_matches(spark, store, term_a, term_b, window).select(
+    matches = _near_all(spark, store, term_a, term_b, window).select(
         "doc_id",
         F.col("pair_count").alias("phrase_count"),
         "doc_len",

@@ -37,24 +37,18 @@ PREFIX_EXPAND_LIMIT = 8
 # driver-side expansion memo: {store epoch key: {(kind, word, params):
 # [terms]}} — a repeated wildcard/fuzzy query must not re-run its
 # dictionary scan (the fuzzy one is a JVM levenshtein over a full length
-# band: ~10^7 rows at a 10^8-term vocabulary). Epoch key mirrors
-# wand._IDF_CACHE: any stats rewrite (append recomputes df, compaction
-# recounts) starts a fresh entry; logical deletes intentionally do NOT
-# invalidate (expansions rank by df, which stays stale until compaction
-# by design).
+# band: ~10^7 rows at a 10^8-term vocabulary). Keyed by
+# ``IndexStore.stats_epoch``, like wand._IDF_CACHE: any stats rewrite
+# (append recomputes df, compaction recounts) starts a fresh entry; logical
+# deletes intentionally do NOT invalidate (expansions rank by df, which
+# stays stale until compaction by design).
 _EXPAND_CACHE: dict[tuple, dict[tuple, list[str]]] = {}
 _EXPAND_CACHE_MAX_STORES = 8
 _EXPAND_CACHE_MAX_ENTRIES = 10_000
 
 
 def _expansion_cache(store: IndexStore) -> dict[tuple, list[str]]:
-    c = store.corpus_stats()
-    key = (
-        str(store.dir),
-        c.get("built_unix"),
-        c.get("last_append_unix"),
-        c.get("compacted_unix"),
-    )
+    key = store.stats_epoch()
     cache = _EXPAND_CACHE.get(key)
     if cache is None:
         while len(_EXPAND_CACHE) >= _EXPAND_CACHE_MAX_STORES:

@@ -8,7 +8,8 @@ time (codec.py).
 
 Distribution model: segments are grouped by ``drange`` (docID range shard).
 Each shard holds every query term's postings restricted to its range, so
-document-at-a-time traversal is shard-local; each shard emits its local
+the block-max traversal (``blockmax_topk_segments``) is shard-local; each
+shard emits its local
 top-k and the driver merge is ``TakeOrderedAndProject`` over shards — the
 two-level top-k from SURVEY.md §3.1.
 
@@ -50,78 +51,7 @@ def _seg_entries(bufs) -> list[tuple[bytes, float]]:
     return out
 
 
-class _TermIter:
-    """Cursor over one term's decoded-on-demand segment with block skipping.
-    ``boost=True`` applies the stored per-posting role weights (codec v2
-    weight stream): exact scores gain a *w factor and the block bounds use
-    the stored block-max of weight*impact."""
-
-    __slots__ = ("seg", "weight", "avgdl", "bi", "i", "doc_ids", "tfs", "dls",
-                 "ws", "cur", "max_score", "exhausted", "bound_scale", "boost")
-
-    def __init__(self, seg: PostingSegment, weight: float, avgdl: float,
-                 bound_scale: float = 1.0, boost: bool = False):
-        self.seg = seg
-        self.weight = weight  # qtf * idf
-        self.avgdl = avgdl
-        self.bound_scale = bound_scale
-        self.boost = boost
-        self.bi = -1
-        self.exhausted = False
-        imps = seg.wimpacts if boost else seg.impacts
-        self.max_score = float(weight * imps.max() * bound_scale)
-        self._load_block(0)
-
-    def _load_block(self, bi: int):
-        if bi >= self.seg.n_blocks:
-            self.exhausted = True
-            self.cur = np.iinfo(np.int64).max
-            return
-        self.bi = bi
-        self.doc_ids, self.tfs, self.dls = self.seg.block(bi)
-        self.ws = self.seg.block_weights(bi) if self.boost else None
-        self.i = 0
-        self.cur = int(self.doc_ids[0])
-
-    def block_max_score(self) -> float:
-        if self.exhausted:
-            return 0.0
-        imps = self.seg.wimpacts if self.boost else self.seg.impacts
-        return float(self.weight * imps[self.bi] * self.bound_scale)
-
-    def next_geq(self, target: int):
-        """Advance to the first docID >= target (block-skip via directory)."""
-        if self.exhausted or self.cur >= target:
-            return
-        if self.seg.last_doc_ids[self.bi] < target:
-            nbi = int(np.searchsorted(self.seg.last_doc_ids, target, side="left"))
-            self._load_block(nbi)
-            if self.exhausted:
-                return
-        j = int(np.searchsorted(self.doc_ids[self.i:], target, side="left"))
-        self.i += j
-        if self.i >= len(self.doc_ids):
-            self._load_block(self.bi + 1)
-        else:
-            self.cur = int(self.doc_ids[self.i])
-
-    def advance(self):
-        self.next_geq(self.cur + 1)
-
-    def score_current(self) -> float:
-        tf = float(self.tfs[self.i])
-        dl = float(self.dls[self.i])
-        impact = tf * (BM25_K1 + 1.0) / (
-            tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / self.avgdl)
-        )
-        if self.boost:
-            # (weight*impact)*w — grouped exactly like the DataFrame path's
-            # score_expr * (importance/tf) so float results are bit-identical
-            return (self.weight * impact) * float(self.ws[self.i])
-        return self.weight * impact
-
-
-def wand_topk_segments(
+def blockmax_topk_segments(
     term_segments: dict[str, list[bytes]],
     term_weights: dict[str, float],
     avgdl: float,
@@ -130,10 +60,20 @@ def wand_topk_segments(
     suspect_of=None,
     boost: bool = False,
 ) -> list[tuple[int, float]]:
-    """Block-max WAND over one drange shard. ``term_segments`` maps each
+    """Block-max top-k over one drange shard. ``term_segments`` maps each
     query term to its encoded segment buffers within the shard (docID-sorted,
     disjoint) — raw ``bytes`` or ``(bytes, bound_scale)`` (see
     ``_seg_entries``). Returns [(doc_id, score)] sorted by (-score, doc_id).
+
+    The WAND pruning principle applied at block granularity (a la block-max
+    maxscore): docID space is processed in regions bounded by the current
+    blocks' last-docIDs; a region whose upper bound (sum of the overlapping
+    blocks' max impacts x weights) cannot beat the current threshold is
+    skipped WITHOUT decoding; regions that survive are scored exactly with
+    dense numpy accumulation, so no per-document Python loop survives.
+    Ascending docID order + doc_id-asc tie-break makes `ub <= threshold`
+    pruning exact (checked against a brute-force scorer in
+    tests/test_wand_kernels.py).
 
     ``suspect_of`` (optional, a bloom with ``contains_many``) switches on
     the tombstone-suspect protocol: bloom-positive docs never enter the
@@ -150,120 +90,7 @@ def wand_topk_segments(
     bound is exact; ``spilled=True`` with a retained suspect that verifies
     DELETED is the one (detectable, rare) case where an evicted
     bloom-false-positive could have qualified, and the caller must fall
-    back to the exact path."""
-    iters: list[_TermIter] = []
-    # term-sorted iterator order + stable sorts below -> per-doc term
-    # contributions sum in sorted-term order (matches the DataFrame path)
-    for term in sorted(term_segments):
-        w = term_weights[term]
-        for buf, scale in _seg_entries(term_segments[term]):
-            if buf:
-                iters.append(
-                    _TermIter(PostingSegment(buf), w, avgdl, scale, boost=boost)
-                )
-    if not iters:
-        return ([], [], False) if suspect_of is not None else []
-
-    # heap entries: (score, -doc_id); worst of top-k at heap[0].
-    # suspects is a SECOND bounded heap (k best suspects) — see docstring.
-    heap: list[tuple[float, int]] = []
-    suspects: list[tuple[float, int]] = []
-    sus_spilled = False
-    INF = np.iinfo(np.int64).max
-    excl_set = set(int(x) for x in excluded) if excluded is not None else None
-
-    while True:
-        live = [it for it in iters if not it.exhausted]
-        if not live:
-            break
-        live.sort(key=lambda it: it.cur)
-        threshold = heap[0][0] if len(heap) >= k else float("-inf")
-
-        # pivot: first position where cumulative max_score exceeds threshold
-        acc = 0.0
-        pivot_idx = None
-        for idx, it in enumerate(live):
-            acc += it.max_score
-            if acc > threshold:
-                pivot_idx = idx
-                break
-        if pivot_idx is None:
-            break  # no doc can beat the threshold
-        pivot_doc = live[pivot_idx].cur
-        if pivot_doc == INF:
-            break
-
-        if live[0].cur == pivot_doc:
-            # block-max refinement: tighter bound from current blocks
-            bm = sum(
-                it.block_max_score() for it in live if it.cur <= pivot_doc
-            )
-            if bm > threshold and not (excl_set and pivot_doc in excl_set):
-                score = 0.0
-                for it in live:
-                    if it.cur == pivot_doc:
-                        score += it.score_current()
-                is_suspect = suspect_of is not None and bool(
-                    suspect_of.contains_many(
-                        np.array([pivot_doc], dtype=np.int64)
-                    )[0]
-                )
-                entry = (score, -pivot_doc)
-                if is_suspect:
-                    # maybe-deleted: keep out of the live heap (threshold
-                    # stays live-only), emit for exact verification if it
-                    # would have qualified — bounded to the k best suspects
-                    if len(heap) < k or entry > heap[0]:
-                        if len(suspects) < k:
-                            heapq.heappush(suspects, entry)
-                        elif entry > suspects[0]:
-                            heapq.heapreplace(suspects, entry)
-                            sus_spilled = True
-                        else:
-                            sus_spilled = True
-                elif score > threshold or (
-                    len(heap) < k
-                ):
-                    if len(heap) < k:
-                        heapq.heappush(heap, entry)
-                    elif entry > heap[0]:
-                        heapq.heapreplace(heap, entry)
-            for it in live:
-                if it.cur == pivot_doc:
-                    it.advance()
-        else:
-            # advance the lagging iterators up to the pivot
-            for it in live:
-                if it.cur < pivot_doc:
-                    it.next_geq(pivot_doc)
-
-    out = [(-nd, s) for s, nd in heap]
-    out.sort(key=lambda x: (-x[1], x[0]))
-    if suspect_of is not None:
-        return out, [(-nd, s) for s, nd in suspects], sus_spilled
-    return out
-
-
-def blockmax_topk_segments(
-    term_segments: dict[str, list[bytes]],
-    term_weights: dict[str, float],
-    avgdl: float,
-    k: int,
-    excluded=None,
-    suspect_of=None,
-    boost: bool = False,
-) -> list[tuple[int, float]]:
-    """Vectorized block-max traversal over one drange shard.
-
-    Same pruning principle as document-at-a-time WAND, applied at block
-    granularity (a la block-max maxscore): docID space is processed in
-    regions bounded by the current blocks' last-docIDs; a region whose
-    upper bound (sum of the overlapping blocks' max impacts x weights)
-    cannot beat the current threshold is skipped WITHOUT decoding; regions
-    that survive are scored exactly with dense numpy accumulation. Ascending
-    docID order + doc_id-asc tie-break makes `ub <= threshold` pruning
-    exact. Identical results to ``wand_topk_segments`` (tested), ~10-50x
-    faster in Python because no per-document loop survives.
+    back to the exact path.
     """
     segs: list[tuple[PostingSegment, float]] = []
     bound_scales: list[float] = []
@@ -297,7 +124,7 @@ def blockmax_topk_segments(
     INF = np.iinfo(np.int64).max
 
     heap: list[tuple[float, int]] = []
-    # bounded k-best suspect heap + spill flag (see wand_topk_segments)
+    # bounded k-best suspect heap + spill flag (see docstring)
     suspects: list[tuple[float, int]] = []
     sus_spilled = False
     decoded: dict[tuple[int, int], tuple] = {}
@@ -429,12 +256,12 @@ def blockmax_topk_segments(
     return out
 
 
-# driver-side term-stats cache: {store epoch key: {term: bm25_idf | None}}.
+# driver-side term-stats cache: {store stats epoch: {term: bm25_idf | None}}.
 # None memoizes "term not in the index" so absent terms do not re-collect on
-# every query. The epoch key folds in the build/append/compact timestamps
-# from corpus stats, so any stats rewrite (streaming append recomputes df,
-# compaction recounts) starts a fresh entry — logical deletes intentionally
-# do NOT invalidate (stats stay stale until compaction by design).
+# every query. ``IndexStore.stats_epoch`` changes on every stats rewrite
+# (streaming append recomputes df, compaction recounts), which starts a
+# fresh entry — logical deletes intentionally do NOT invalidate (stats stay
+# stale until compaction by design).
 _IDF_CACHE: dict[tuple, dict[str, float | None]] = {}
 _IDF_CACHE_MAX_STORES = 8
 _IDF_CACHE_MAX_TERMS = 100_000
@@ -443,13 +270,7 @@ _IDF_CACHE_MAX_TERMS = 100_000
 def _cached_term_idf(
     spark: SparkSession, store: IndexStore, terms: list[str], n_buckets: int
 ) -> dict[str, float | None]:
-    c = store.corpus_stats()
-    key = (
-        str(store.dir),
-        c.get("built_unix"),
-        c.get("last_append_unix"),
-        c.get("compacted_unix"),
-    )
+    key = store.stats_epoch()
     cache = _IDF_CACHE.get(key)
     if cache is None:
         while len(_IDF_CACHE) >= _IDF_CACHE_MAX_STORES:
@@ -493,7 +314,7 @@ def bm25_topk_wand(
         return spark.createDataFrame([], "doc_id long, score double")
     cstats = store.corpus_stats()
     avgdl = cstats["avgdl"]
-    n_buckets = int(cstats.get("n_buckets", 64))
+    n_buckets = cstats["n_buckets"]
     qtf = Counter(terms)
     uniq = sorted(qtf)
     buckets = sorted({term_bucket_py(t, n_buckets) for t in uniq})

@@ -10,13 +10,30 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cores() -> int:
+    """``SPARK_GRAFT_CPUS``, else the CPUs this process may run on."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
+def default_driver_memory() -> str:
+    """``SPARK_DRIVER_MEM``, else half the host's physical RAM in whole GiB
+    (at least 1g): in local mode the driver JVM holds the executors too,
+    and the Python workers need the other half."""
+    env = os.environ.get("SPARK_DRIVER_MEM")
+    if env:
+        return env
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, ram // 2**31)}g"
+
+
 def get_spark(
     app_name: str = "search_engine_spark",
     cores: int | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or default_cores()
     shuffle_partitions = shuffle_partitions or max(cores, 8)
     # Shuffle spill dir: prefer tmpfs when present. In local mode every
     # task shares ONE virtual disk, so shuffle I/O serializes across cores —
@@ -34,7 +51,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")

@@ -91,7 +91,7 @@ def append_batch(
     ids = assign_doc_ids(batch_df, cleanup=cleanup).withColumn(
         "doc_id", F.col("doc_id") + F.lit(base)
     )
-    analyzed = with_terms(ids, stem=cstats.get("stem", True)).persist()
+    analyzed = with_terms(ids, stem=cstats["stem"]).persist()
     cleanup.append(analyzed)
     docs = (
         analyzed.withColumn("doc_len", F.size("terms"))

@@ -11,6 +11,17 @@ from search_engine_spark.query.pipeline import search
 
 QUERY = f"{HEAD_TERMS[0]} {VOCAB[0]}"
 PHRASE_Q = f'"{VOCAB[0]} {VOCAB[1]}"'
+NEAR_Q = f"{HEAD_TERMS[0]} NEAR/3 {HEAD_TERMS[1]}"
+CHAIN_Q = f"{VOCAB[1]} NEAR/8 {VOCAB[0]} NEAR/8 {VOCAB[2]}"
+# synthetic-term queries whose df is counted over their match set
+MATCH_QUERIES = (PHRASE_Q, NEAR_Q, CHAIN_Q)
+
+
+def _served(spark, store, q, k=10**6):
+    return [
+        (int(r["doc_id"]), float(r["score"]))
+        for r in search(spark, store, q, k=k, with_metadata=False).collect()
+    ]
 
 
 @pytest.fixture(scope="module")
@@ -20,15 +31,19 @@ def deleted_setup(spark, transcripts_pdf, tmp_path_factory):
         spark, spark.createDataFrame(transcripts_pdf), str(d),
         drange_span=64, n_chunks=2,
     )
-    # delete the docs that top the query before deletion
-    before = search(spark, store, QUERY, k=3, with_metadata=False).collect()
-    victims = [r["doc_id"] for r in before]
+    # delete the docs that top the term query and each match query before
+    # deletion; keep each match query's full pre-delete list
+    before = {q: _served(spark, store, q) for q in MATCH_QUERIES}
+    victims = [doc for doc, _ in _served(spark, store, QUERY, k=3)]
+    for q in MATCH_QUERIES:
+        assert len(before[q]) > 2, q
+        victims += [doc for doc, _ in before[q][:2] if doc not in victims]
     mark_deleted(spark, store, victims)
-    return store, victims
+    return store, victims, before
 
 
 def test_tombstones_exclude_from_all_paths(spark, deleted_setup):
-    store, victims = deleted_setup
+    store, victims, _ = deleted_setup
     for engine in ("df", "wand"):
         got = search(
             spark, store, QUERY, k=10, engine=engine, with_metadata=False
@@ -40,7 +55,7 @@ def test_tombstones_exclude_from_all_paths(spark, deleted_setup):
 
 
 def test_df_and_wand_agree_under_tombstones(spark, deleted_setup):
-    store, _ = deleted_setup
+    store, _, _ = deleted_setup
     a = search(spark, store, QUERY, k=10, engine="df", with_metadata=False).collect()
     b = search(spark, store, QUERY, k=10, engine="wand", with_metadata=False).collect()
     assert [(r["doc_id"], round(r["score"], 9)) for r in a] == [
@@ -48,10 +63,36 @@ def test_df_and_wand_agree_under_tombstones(spark, deleted_setup):
     ]
 
 
+def test_match_query_scores_stay_put_until_compaction(
+    spark, transcripts_pdf, deleted_setup
+):
+    """Between a delete and its compaction n_docs, avgdl and term df still
+    count the deleted docs; the df of a phrase or NEAR match set must count
+    them too. So the served list is the pre-delete list minus the victims,
+    and the phrase list equals the pre-delete oracle's minus the victims."""
+    store, victims, before = deleted_setup
+    gone = set(victims)
+    oix = build_oracle_index(transcripts_pdf)
+    exp = [
+        (d, s) for d, s in topk(score_query(oix, PHRASE_Q), 10**9)
+        if d not in gone
+    ][:10]
+    got = _served(spark, store, PHRASE_Q, k=10)
+    assert [d for d, _ in got] == [d for d, _ in exp]
+    assert all(abs(a - b) <= 1e-9 for (_, a), (_, b) in zip(got, exp))
+    for q in MATCH_QUERIES:
+        exp = [(d, s) for d, s in before[q] if d not in gone]
+        got = _served(spark, store, q)
+        assert [d for d, _ in got] == [d for d, _ in exp], q
+        assert all(
+            abs(a - b) <= 1e-9 for (_, a), (_, b) in zip(got, exp)
+        ), q
+
+
 def test_compaction_restores_fresh_build_semantics(
     spark, transcripts_pdf, deleted_setup
 ):
-    store, victims = deleted_setup
+    store, victims, _ = deleted_setup
     compact(spark, store)
     assert tombstones(spark, store) is None
     assert store.corpus_stats()["n_docs"] == len(transcripts_pdf) - len(victims)

@@ -83,7 +83,7 @@ def test_positions_match_oracle(spark, index_store, oracle_index):
     from search_engine_spark.index.codec import varbyte_decode
 
     p = (
-        index_store.positions(spark)
+        index_store.postings(spark)
         .select("term", "doc_id", "tf", "positions")
         .toPandas()
     )

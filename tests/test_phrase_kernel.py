@@ -1,12 +1,11 @@
-"""Regression tests for the doc-partitioned phrase adjacency kernel
-(query/phrase.py): contiguity under multi-batch partitions, non-default
-bucket counts, and the composite-key overflow guard."""
+"""Regression tests for the segment phrase adjacency kernel
+(query/phrase.py): exactness under tiny Arrow batches, non-default bucket
+counts, and the composite-key overflow guard."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from search_engine_spark.corpus import HEAD_TERMS, VOCAB
 from search_engine_spark.oracle import score_query, topk
@@ -14,35 +13,19 @@ from search_engine_spark.query.phrase import phrase_matches
 from search_engine_spark.query.pipeline import search
 
 
-def _phrase_counts(spark, store, terms, force_row_path=False):
-    if force_row_path:
-        # explicit pos_rows pins the doc-partitioned ROW kernel (stores
-        # with positional segments otherwise dispatch to the segment path,
-        # which is Arrow-batch-independent — the contiguity regression
-        # below must keep exercising the row kernel's carry logic)
-        from search_engine_spark.query.phrase import (
-            candidate_docs_any,
-            positions_for,
-        )
-
-        pos_rows = positions_for(
-            spark, store, terms,
-            candidates=candidate_docs_any(spark, store, [terms]),
-        )
-        rows = phrase_matches(spark, store, terms, pos_rows=pos_rows).collect()
-    else:
-        rows = phrase_matches(spark, store, terms).collect()
+def _phrase_counts(spark, store, terms):
+    rows = phrase_matches(spark, store, terms).collect()
     return sorted((int(r["doc_id"]), int(r["phrase_count"])) for r in rows)
 
 
 def test_kernel_correct_when_partitions_span_many_arrow_batches(
     spark, index_store, oracle_index
 ):
-    """A doc's position rows arrive from different tbucket scan tasks; once
-    a partition exceeds one Arrow batch, an unsorted stream would split a
-    doc across non-adjacent batches and the carry logic would drop its
-    matches. Force tiny batches (every partition spans MANY batches) and
-    assert the kernel still matches the brute-force oracle."""
+    """A (term, drange) group's segment rows come from different tbucket
+    scan tasks and chunks; the per-drange kernel must see the whole group
+    however Arrow batches the shuffle. Force tiny batches (every group
+    spans MANY batches) and assert the kernel still matches the
+    brute-force oracle, and with normal batches gives the same counts."""
     from search_engine_spark.analysis import analyze_query
 
     phrase_q = f'"{HEAD_TERMS[0]} {HEAD_TERMS[1]}"'
@@ -51,19 +34,19 @@ def test_kernel_correct_when_partitions_span_many_arrow_batches(
     old = conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
     conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "3")
     try:
-        got = _phrase_counts(spark, index_store, terms, force_row_path=True)
+        got = _phrase_counts(spark, index_store, terms)
     finally:
         conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
     exp = topk(score_query(oracle_index, phrase_q), 10**9)
     # oracle top-k over ALL matches: same doc set
     assert [d for d, _ in got] == sorted(d for d, _ in exp)
     # and with normal batches, byte-identical counts
-    assert got == _phrase_counts(spark, index_store, terms, force_row_path=True)
+    assert got == _phrase_counts(spark, index_store, terms)
 
 
 def test_nondefault_bucket_count_index(spark, transcripts_df, oracle_index,
                                        tmp_path):
-    """candidate_docs / candidates_for_terms / WAND must prune with the
+    """The segment scan / candidates_for_terms / WAND must prune with the
     STORE's bucket count, not the module default 64 — an index built with
     n_buckets=7 used to scan the wrong partition dirs and return empty."""
     from search_engine_spark.index.builder import build_index
@@ -88,21 +71,23 @@ def test_nondefault_bucket_count_index(spark, transcripts_df, oracle_index,
             )
 
 
-def test_position_overflow_fails_loudly(spark, index_store):
+def test_position_overflow_fails_loudly():
     """A position at/over 2^21-64 would corrupt the composite doc<<21|pos
-    key — the kernel must raise, not silently mis-match."""
-    from search_engine_spark.index.codec import varbyte_encode
+    key — gathering a candidate's positions must raise, not silently
+    mis-match."""
+    from search_engine_spark.index.codec import (
+        PositionalSegment,
+        encode_positions_segment,
+        varbyte_encode,
+    )
+    from search_engine_spark.query.phrase import gather_candidate_keys
 
     bad_pos = varbyte_encode(np.array([5, (1 << 21) - 1], dtype=np.int64))
-    ok_pos = varbyte_encode(np.array([0, 1], dtype=np.int64))
-    rows = spark.createDataFrame(
-        [
-            ("alpha", 1, 2, 10, bytearray(bad_pos)),
-            ("beta", 1, 2, 10, bytearray(ok_pos)),
-        ],
-        "term string, doc_id long, tf int, doc_len int, positions binary",
-    )
-    with pytest.raises(Exception, match="composite phrase key"):
-        phrase_matches(
-            spark, index_store, ["alpha", "beta"], pos_rows=rows
-        ).collect()
+    part = {
+        "ids": np.array([1], dtype=np.int64),
+        "tfs": np.array([2], dtype=np.int64),
+        "dls": np.array([10], dtype=np.int64),
+        "pos": PositionalSegment(encode_positions_segment([bad_pos])),
+    }
+    with pytest.raises(ValueError, match="composite phrase key"):
+        gather_candidate_keys([part], np.array([1], dtype=np.int64))

@@ -58,7 +58,7 @@ def test_enriched_result_is_local_relation(spark, index_store):
 
 def test_positions_scan_prunes_partitions(spark, index_store):
     """Phrase queries must get the same directory pruning postings have:
-    positions/ is partitioned by tbucket and phrase_matches filters on it."""
+    segments/ is partitioned by tbucket and the phrase scan filters on it."""
     from search_engine_spark.analysis import analyze_query
     from search_engine_spark.query.phrase import phrase_matches
 

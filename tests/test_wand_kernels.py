@@ -1,15 +1,12 @@
-"""Kernel-level equivalence + pruning properties of the two shard scorers:
-document-at-a-time block-max WAND (``wand_topk_segments``) and the
-vectorized block-max region scorer (``blockmax_topk_segments``)."""
+"""Kernel-level exactness of the shard scorer, the vectorized block-max
+region scorer (``blockmax_topk_segments``), against a brute-force
+reference."""
 
 import numpy as np
 import pytest
 
 from search_engine_spark.index.codec import bm25_idf, encode_postings
-from search_engine_spark.query.wand import (
-    blockmax_topk_segments,
-    wand_topk_segments,
-)
+from search_engine_spark.query.wand import blockmax_topk_segments
 
 
 def _brute(term_segments_raw, weights, avgdl, k):
@@ -40,14 +37,10 @@ def test_kernels_match_brute_force(seed, k):
         weights[term] = float(rng.integers(1, 3)) * float(bm25_idf(n_docs, n))
 
     exp = [(d, round(s, 10)) for d, s in _brute(raw, weights, avgdl, k)]
-    got_wand = [
-        (d, round(s, 10)) for d, s in wand_topk_segments(enc, weights, avgdl, k)
-    ]
-    got_bm = [
+    got = [
         (d, round(s, 10)) for d, s in blockmax_topk_segments(enc, weights, avgdl, k)
     ]
-    assert got_wand == exp
-    assert got_bm == exp
+    assert got == exp
 
 
 def test_multiple_disjoint_buffers_per_term():
@@ -67,14 +60,13 @@ def test_multiple_disjoint_buffers_per_term():
     raw = {"x": (np.concatenate([ids1, ids2]), np.concatenate([tf, tf[:2]]),
                  np.concatenate([dl, dl[:2]]))}
     exp = [(d, round(s, 10)) for d, s in _brute(raw, w, avgdl, 3)]
-    for fn in (wand_topk_segments, blockmax_topk_segments):
-        assert [(d, round(s, 10)) for d, s in fn(enc, w, avgdl, 3)] == exp
+    got = blockmax_topk_segments(enc, w, avgdl, 3)
+    assert [(d, round(s, 10)) for d, s in got] == exp
 
 
 def test_empty_and_tiny():
-    for fn in (wand_topk_segments, blockmax_topk_segments):
-        assert fn({}, {}, 10.0, 5) == []
-        enc = {"x": [encode_postings(np.array([7], dtype=np.int64),
-                                     np.array([1]), np.array([4]), 10.0)]}
-        out = fn(enc, {"x": 2.0}, 10.0, 5)
-        assert len(out) == 1 and out[0][0] == 7
+    assert blockmax_topk_segments({}, {}, 10.0, 5) == []
+    enc = {"x": [encode_postings(np.array([7], dtype=np.int64),
+                                 np.array([1]), np.array([4]), 10.0)]}
+    out = blockmax_topk_segments(enc, {"x": 2.0}, 10.0, 5)
+    assert len(out) == 1 and out[0][0] == 7

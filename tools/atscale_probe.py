@@ -8,6 +8,7 @@ full bench harness. Usage: python tools/atscale_probe.py [ix_dir] [repeats]
 from __future__ import annotations
 
 import json
+import shutil
 import statistics
 import sys
 import time
@@ -31,7 +32,8 @@ def main() -> None:
 
     spark = get_spark("atscale-probe", cores=8, shuffle_partitions=8)
     store = IndexStore(ix_dir)
-    if not store.corpus_stats_path.exists():
+    if not store.readable():  # none yet, or an older format: rebuild
+        shutil.rmtree(ix_dir, ignore_errors=True)
         t0 = time.time()
         build_index(spark, spark.read.parquet(corpus), ix_dir, n_chunks=1)
         print(f"[probe] built in {time.time() - t0:.1f}s", file=sys.stderr)
@@ -58,9 +60,7 @@ def main() -> None:
         "queries_all": out,
         "probes_mhs": [p0, p1],
         "n_docs": store.corpus_stats()["n_docs"],
-        "positional_segments": bool(
-            store.corpus_stats().get("positional_segments")
-        ),
+        "format_version": store.corpus_stats()["format_version"],
     }))
 
 
