@@ -2032,29 +2032,32 @@ turns AS (
 
 
 # ---------------------------------------------------------------------------
-# Contract-row rotation (round 6): the driver's per-round CORRECTNESS
-# artifact records the FIRST 50 entries; round 5 spent its 50 on everything
-# round 4 missed, leaving 29 entries with an r4-vintage driver row
-# (VERDICT r5 next #3). This round ALSO rewrote the index-build kernels
-# (mapInArrow) and the LM/batch serve paths, and VERDICT's standing rule is
-# that changed-kernel entries stay inside the recorded 50. Both wants fit:
-# the first 50 = the 29 stale rows (refreshing their hard signal) + the 21
-# most load-bearing engine rows whose kernels changed this round (every
-# index mutation family, both transcript-store engines, LM, batch, the
-# nested-boolean and fuzzy-index serves). The 29 entries left in the tail
-# are all r5-driver-green and artifact-independent (adhoc/analytics rows).
+# Contract-row rotation: the driver's per-round CORRECTNESS artifact
+# records the FIRST 50 entries, and rows whose kernels a change touches
+# belong inside those 50. Round 6 filled them with the rows whose last
+# driver signal was r4 plus the engine rows whose kernels changed then
+# (mapInArrow build kernels, LM/batch serve paths). Since the WAND, phrase,
+# NEAR and NEAR-chain kernels moved to one Arrow shard runner
+# (query/phrase.shard_map), the rows they serve that sat in the tail
+# (near_match, near_search, wildcard_search, fuzzy_search, more_like_this)
+# hold the places of five analytics rows whose code did not change
+# (events_hourly, pricing_summary, top_revenue_orders, media_meta,
+# frame_sample). The tail is not artifact-independent: beside the
+# adhoc/analytics rows it still holds index-served ones (search_facets,
+# total_hits, explain_topk, filtered_search, spell_suggest).
 # Pure reordering: every entry keeps its name, callable, and oracle SQL.
 _ROTATE_FIRST_R6 = [
-    # -- the 29 rows whose last driver signal is r4 ----------------------
+    # -- 24 of the 29 rows whose last driver signal was r4 --------------
     "minhash_lsh_pairs", "dup_components", "jaccard_pairs", "simhash_pairs",
     "embedding_dup_pairs", "cosine_topk", "ivf_topk", "lsh_ann_topk",
     "ivf_kmeans_topk", "pagerank", "events_sessions", "stratified_sample",
-    "events_hourly", "pricing_summary", "top_revenue_orders", "token_counts",
-    "quality_scores", "lang_id", "en_bigram_score", "fingerprints",
-    "repetition_scores", "pii_redact", "url_normalize", "robots_allowed",
-    "media_meta", "media_features", "frame_sample", "snippet_spans",
-    "highlight_topk",
-    # -- 21 engine rows whose kernels changed this round -----------------
+    "token_counts", "quality_scores", "lang_id", "en_bigram_score",
+    "fingerprints", "repetition_scores", "pii_redact", "url_normalize",
+    "robots_allowed", "media_features", "snippet_spans", "highlight_topk",
+    # -- rows served by the Arrow shard kernels ---------------------------
+    "near_match", "near_search", "wildcard_search", "fuzzy_search",
+    "more_like_this",
+    # -- 21 engine rows whose kernels changed in round 6 ------------------
     "index_bm25_df", "index_bm25_wand", "index_bm25_boosted",
     "index_bm25_boosted_wand", "index_phrase_match", "index_logical_and",
     "index_logical_or", "index_logical_not", "index_bm25_appended",

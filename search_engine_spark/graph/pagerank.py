@@ -5,8 +5,12 @@ init 1/N, dangling mass redistributed uniformly, L1-normalize every
 iteration, converge on max |delta| < 1e-6, cap 100 iterations. The reference
 loops O(V*E) single-threaded over an in-memory adjacency map; here each
 iteration is an edge join + aggregate (shuffle hash join on src), with the
-rank vector checkpointed via localCheckpoint every few iterations to truncate
-lineage — the standard scalable formulation.
+rank vector checkpointed via localCheckpoint every iteration to truncate
+lineage — the standard scalable formulation. The previous ranks ride into
+the aggregate through a union, not a second join: Catalyst estimates a
+join's size as the product of its inputs and a checkpoint keeps that
+estimate, so a rank vector joined twice per iteration would square the
+estimate every round.
 """
 
 from __future__ import annotations
@@ -26,7 +30,6 @@ def pagerank(
     damping: float = DAMPING,
     epsilon: float = EPSILON,
     max_iter: int = MAX_ITERATIONS,
-    checkpoint_every: int = 5,
 ) -> DataFrame:
     """edges: (src, dst). Returns (node, rank). Nodes = union of src/dst."""
     nodes = (
@@ -50,7 +53,9 @@ def pagerank(
     n_dangling = nodes_f.filter("is_dangling").count()
     # uniform init -> iteration 0's dangling mass is known without a scan
     dangling = n_dangling / n * 1.0
-    ranks = nodes_f.select("node", F.lit(1.0 / n).alias("rank")).localCheckpoint()
+    ranks = nodes_f.select(
+        "node", "is_dangling", F.lit(1.0 / n).alias("rank")
+    ).localCheckpoint()
 
     for it in range(max_iter):
         prev = ranks
@@ -61,21 +66,21 @@ def pagerank(
                 F.col("dst").alias("node"),
                 (F.col("rank") / F.col("out_deg")).alias("contrib"),
             )
-            .groupBy("node")
-            .agg(F.sum("contrib").alias("in_sum"))
         )
         # dangling mass redistributed uniformly (PageRank.java:46-50)
         base = (1.0 - damping) / n + damping * dangling / n
+        # each node's previous rank and dangling flag join its in-edge
+        # contributions in ONE aggregate (null-padded union rows)
         new_ranks = (
-            nodes_f.join(contribs, "node", "left")
-            .join(prev.withColumnRenamed("rank", "prev_rank"), "node")
-            .select(
-                "node",
-                "is_dangling",
-                "prev_rank",
+            prev.withColumnRenamed("rank", "prev_rank")
+            .unionByName(contribs, allowMissingColumns=True)
+            .groupBy("node")
+            .agg(
+                F.max("is_dangling").alias("is_dangling"),
+                F.max("prev_rank").alias("prev_rank"),
                 (
                     F.lit(base)
-                    + F.lit(damping) * F.coalesce(F.col("in_sum"), F.lit(0.0))
+                    + F.lit(damping) * F.coalesce(F.sum("contrib"), F.lit(0.0))
                 ).alias("rank"),
             )
         )
@@ -94,7 +99,7 @@ def pagerank(
         total = float(row["total"] or 1.0)
         dangling = float(row["dangling"] or 0.0) / total
         ranks = new_ranks.select(
-            "node", (F.col("rank") / F.lit(total)).alias("rank")
+            "node", "is_dangling", (F.col("rank") / F.lit(total)).alias("rank")
         )
         # convergence on max |delta| vs the pre-normalization ranks: the
         # update conserves mass exactly ((1-d) + d*(edge + dangling mass)),
@@ -106,7 +111,7 @@ def pagerank(
             delta = row["delta"]
             if delta is not None and delta < epsilon:
                 break
-    return ranks
+    return ranks.select("node", "rank")
 
 
 def conversation_graph(docs: DataFrame) -> DataFrame:

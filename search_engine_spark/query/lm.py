@@ -1,6 +1,6 @@
 """Dirichlet-smoothed language-model ranking (second similarity).
 
-Lucene-parity feature (``LMDirichletSimilarity``): per matched query term
+Per matched query term, summed over the query's terms (unclamped):
 
     score(t, D) = qtf(t) * [ ln(1 + tf / (mu * P(t|C))) + ln(mu / (dl + mu)) ]
     P(t|C)      = cf(t) / |C|
@@ -10,6 +10,15 @@ count (n_docs * avgdl — exact, since avgdl is the arithmetic mean of kept
 doc lengths). mu defaults to Lucene's 2000. Swapping similarities is a
 first-class production-engine capability the BM25/tf-idf pair alone does
 not demonstrate.
+
+This is the formula of Lucene's ``LMDirichletSimilarity``, but not its
+scores. Lucene clamps each term's score at ``max(0, ·)``; here a matched
+term whose length penalty ln(mu / (dl + mu)) outweighs its tf gain (low tf
+in a long doc) adds a negative amount, so it can rank a doc below one that
+lacks the term. Lucene also estimates P(t|C) as (cf + 1) / (|C| + 1) and
+reads dl from a lossy one-byte norm; here both are exact. The contract's
+oracle (``_lm_sql`` in ``__spark_entry__.py``) scores the same unclamped
+formula.
 
 Scale shape (100 TB story): identical to the BM25 DataFrame path — ONE
 tbucket-pruned, term-IN-pushed posting scan. cf(t) is a static per-term

@@ -16,12 +16,13 @@ of logical queries and the NEAR operators (proximity.py):
    (``codec.PositionalSegment``).
 2. **one shuffle of those blobs grouped by drange** — a few MB of
    compressed bytes, never per-posting rows.
-3. **per-range kernel** (applyInPandas): intersect the compact docID
-   streams first — the reference's doc-set intersection, done before any
-   position is touched — then decode ONLY the positional blocks holding a
-   candidate, build int64 keys ``doc_id << 21 | pos`` and chain
-   membership probes per phrase offset — no per-doc Python. Output is one
-   row per matching doc.
+3. **per-range kernel** (``shard_map``: one ``applyInArrow`` boundary
+   shared with the WAND and NEAR kernels, Arrow in and out, no pandas):
+   intersect the compact docID streams first — the reference's doc-set
+   intersection, done before any position is touched — then decode ONLY
+   the positional blocks holding a candidate, build int64 keys
+   ``doc_id << 21 | pos`` and chain membership probes per phrase offset —
+   no per-doc Python. Output is one row per matching doc.
 
 Scoring (``score_phrase_matches``) counts the synthetic phrase term's df
 over every segment match and only then drops tombstoned docs: between a
@@ -32,9 +33,11 @@ docs, so the phrase df must count them too.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from ..index.storage import IndexStore
 
@@ -119,7 +122,7 @@ def gather_candidate_keys(
     )
 
 
-def decode_segment_parts(pdf: pd.DataFrame) -> dict[str, list[dict]]:
+def decode_segment_parts(table: pa.Table) -> dict[str, list[dict]]:
     """Per-term chunk parts from ONE doc-range's segment rows: decode the
     compact docID/tf/dl streams, keep the positional stream as a lazily
     block-decodable ``PositionalSegment``. A (term, drange) pair can span
@@ -128,51 +131,38 @@ def decode_segment_parts(pdf: pd.DataFrame) -> dict[str, list[dict]]:
     order. Shared by the phrase/logical and proximity segment kernels."""
     from ..index.codec import PositionalSegment, PostingSegment
 
-    per_term: dict[str, list] = {}
-    for t, pb, xb in zip(pdf["term"], pdf["postings"], pdf["positions"]):
-        per_term.setdefault(t, []).append((bytes(pb), bytes(xb)))
     parts_of: dict[str, list[dict]] = {}
-    for t, lst in per_term.items():
-        parts = []
-        for pb, xb in lst:
-            seg = PostingSegment(pb)
-            ids, tfs, dls = seg.decode_all()
-            parts.append(
-                {"ids": ids, "tfs": tfs, "dls": dls,
-                 "pos": PositionalSegment(xb)}
-            )
+    cols = table.select(["term", "postings", "positions"]).to_pydict()
+    for t, pb, xb in zip(*cols.values()):
+        ids, tfs, dls = PostingSegment(pb).decode_all()
+        parts_of.setdefault(t, []).append(
+            {"ids": ids, "tfs": tfs, "dls": dls, "pos": PositionalSegment(xb)}
+        )
+    for parts in parts_of.values():
         parts.sort(key=lambda p: int(p["ids"][0]))
-        parts_of[t] = parts
     return parts_of
 
 
+def part_ids(parts: list[dict]) -> np.ndarray:
+    """Every docID of one term's chunk parts, ascending (parts come sorted
+    out of ``decode_segment_parts``)."""
+    if len(parts) == 1:
+        return parts[0]["ids"]
+    return np.concatenate([p["ids"] for p in parts])
+
+
 def _seg_kernel(sides: list[list[str]]):
-    """applyInPandas kernel over ONE doc-range's segment rows: decode the
-    compact docID/tf/dl streams fully (they are the candidate intersection
-    input), then decode ONLY the positional blocks whose posting range
-    contains a candidate — the per-block skip directory
+    """Shard kernel (see ``shard_map``) over ONE doc-range's segment rows:
+    decode the compact docID/tf/dl streams fully (they are the candidate
+    intersection input), then decode ONLY the positional blocks whose
+    posting range contains a candidate — the per-block skip directory
     (``codec.PositionalSegment``) turns the rest of the positions stream
     into byte-range skips. Emits (side, doc_id, phrase_count, doc_len) per
     matched side."""
     side_sets = [sorted(set(ts)) for ts in sides]
 
-    empty = pd.DataFrame(
-        {
-            "side": pd.Series(dtype="int32"),
-            "doc_id": pd.Series(dtype="int64"),
-            "phrase_count": pd.Series(dtype="int64"),
-            "doc_len": pd.Series(dtype="int64"),
-        }
-    )
-
-    def shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        parts_of = decode_segment_parts(pdf)
-
-        def ids_of(t: str) -> np.ndarray:
-            ps = parts_of[t]
-            if len(ps) == 1:
-                return ps[0]["ids"]
-            return np.concatenate([p["ids"] for p in ps])
+    def shard(table: pa.Table) -> dict | None:
+        parts_of = decode_segment_parts(table)
 
         # candidate docs per side: docs containing ALL the side's terms —
         # the classic intersect-before-positions order, on in-memory
@@ -182,14 +172,16 @@ def _seg_kernel(sides: list[list[str]]):
             if any(t not in parts_of for t in ss):
                 side_cands.append(np.empty(0, np.int64))
                 continue
-            cand = ids_of(ss[0])
+            cand = part_ids(parts_of[ss[0]])
             for t in ss[1:]:
                 if cand.size == 0:
                     break
-                cand = np.intersect1d(cand, ids_of(t), assume_unique=True)
+                cand = np.intersect1d(
+                    cand, part_ids(parts_of[t]), assume_unique=True
+                )
             side_cands.append(cand)
         if not any(c.size for c in side_cands):
-            return empty
+            return None
 
         term_keys: dict[str, np.ndarray] = {}
         term_dl: dict[str, tuple[np.ndarray, np.ndarray]] = {}
@@ -225,20 +217,12 @@ def _seg_kernel(sides: list[list[str]]):
                 continue
             mdoc, mcnt = np.unique(starts >> _POS_BITS, return_counts=True)
             dl_ids, dl_vals = term_dl[ts[0]]
-            dl_idx = np.searchsorted(dl_ids, mdoc)
-            outs.append(
-                pd.DataFrame(
-                    {
-                        "side": np.full(mdoc.size, si, dtype=np.int32),
-                        "doc_id": mdoc,
-                        "phrase_count": mcnt.astype(np.int64),
-                        "doc_len": dl_vals[dl_idx].astype(np.int64),
-                    }
-                )
-            )
+            outs.append((np.full(mdoc.size, si, dtype=np.int32), mdoc, mcnt,
+                         dl_vals[np.searchsorted(dl_ids, mdoc)]))
         if not outs:
-            return empty
-        return pd.concat(outs, ignore_index=True)
+            return None
+        cols = ("side", "doc_id", "phrase_count", "doc_len")
+        return dict(zip(cols, map(np.concatenate, zip(*outs))))
 
     return shard
 
@@ -263,6 +247,23 @@ def segment_scan(
     )
 
 
+def shard_map(scan: DataFrame, kernel, schema: str) -> DataFrame:
+    """The serve path's one shard-kernel boundary (WAND, phrase/logical,
+    NEAR, NEAR chain): run ``kernel`` once per drange group on its
+    ``pyarrow.Table``. The kernel returns a dict of column arrays, or
+    ``None`` for no rows; the typed output is built here from the DDL
+    ``schema``."""
+    arrow_schema = to_arrow_schema(StructType.fromDDL(schema))
+
+    def run(table):
+        cols = kernel(table)
+        if cols is None:
+            return arrow_schema.empty_table()
+        return pa.Table.from_pydict(cols, schema=arrow_schema)
+
+    return scan.groupBy("drange").applyInArrow(run, schema=schema)
+
+
 def phrase_matches_multi(
     spark: SparkSession, store: IndexStore, sides: list[list[str]]
 ) -> DataFrame:
@@ -274,9 +275,10 @@ def phrase_matches_multi(
     decoded at most once. Tombstoned docs are NOT dropped here: the match
     set feeds ``score_phrase_matches``, which counts df over it first."""
     scan = segment_scan(spark, store, [t for ts in sides for t in ts])
-    return scan.groupBy("drange").applyInPandas(
+    return shard_map(
+        scan,
         _seg_kernel(sides),
-        schema="side int, doc_id long, phrase_count long, doc_len long",
+        "side int, doc_id long, phrase_count long, doc_len long",
     )
 
 

@@ -10,11 +10,13 @@ ordinals over the surviving analyzed stream — stopwords between the words
 don't widen the gap, same convention as the phrase path).
 
 Spark plan — identical shape to the phrase segment path (the 100 TB plan):
-pruned columnar scan of the two terms' segment rows (tbucket partition
-dirs + pushed term filter, scored blobs + positional stream only), ONE
-shuffle of compressed per-(term, drange) blobs grouped by drange, then a
-per-range kernel that intersects the compact docID streams, block-skip
-decodes only the candidate docs' positional blocks
+pruned columnar scan of the two terms' segment rows (``phrase.segment_scan``:
+tbucket partition dirs + pushed term filter, scored blobs + positional
+stream only), ONE shuffle of compressed per-(term, drange) blobs grouped by
+drange, then a per-range kernel behind the serve path's one Arrow shard
+boundary (``phrase.shard_map``, ``applyInArrow``: Arrow table in, typed
+Arrow columns out, no pandas). The kernel intersects the compact docID
+streams, block-skip decodes only the candidate docs' positional blocks
 (``phrase.gather_candidate_keys``), and counts qualifying pairs with two
 ``searchsorted`` probes per occurrence of the rarer side — no pair
 materialization, no per-doc Python loop.
@@ -27,7 +29,6 @@ synthetic-term BM25 as phrase matches).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -37,8 +38,10 @@ from .phrase import (
     _POS_BITS,
     decode_segment_parts,
     gather_candidate_keys,
+    part_ids,
     score_phrase_matches,
     segment_scan,
+    shard_map,
 )
 
 # gather_candidate_keys guarantees pos < 2^_POS_BITS - 64, so a window up
@@ -47,38 +50,24 @@ MAX_WINDOW = 63
 
 
 def _near_kernel(term_a: str, term_b: str, window: int):
-    """applyInPandas kernel over ONE doc-range's segment rows: emits
-    (doc_id, pair_count, doc_len) for docs where ``term_a`` and ``term_b``
-    co-occur within ``window`` positions."""
+    """Shard kernel (see ``phrase.shard_map``) over ONE doc-range's segment
+    rows: emits (doc_id, pair_count, doc_len) for docs where ``term_a`` and
+    ``term_b`` co-occur within ``window`` positions."""
 
-    empty = pd.DataFrame(
-        {
-            "doc_id": pd.Series(dtype="int64"),
-            "pair_count": pd.Series(dtype="int64"),
-            "doc_len": pd.Series(dtype="int64"),
-        }
-    )
-
-    def shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        parts_of = decode_segment_parts(pdf)
+    def shard(table) -> dict | None:
+        parts_of = decode_segment_parts(table)
         if term_a not in parts_of or term_b not in parts_of:
-            return empty
-
-        def ids_of(t: str) -> np.ndarray:
-            ps = parts_of[t]
-            if len(ps) == 1:
-                return ps[0]["ids"]
-            return np.concatenate([p["ids"] for p in ps])
-
+            return None
         cand = np.intersect1d(
-            ids_of(term_a), ids_of(term_b), assume_unique=True
+            part_ids(parts_of[term_a]), part_ids(parts_of[term_b]),
+            assume_unique=True,
         )
         if cand.size == 0:
-            return empty
+            return None
         ga = gather_candidate_keys(parts_of[term_a], cand)
         gb = gather_candidate_keys(parts_of[term_b], cand)
         if ga is None or gb is None:
-            return empty
+            return None
         keys_a, dl_ids, dl_vals = ga
         keys_b = gb[0]
         # per occurrence of a: count b-positions in [pa - w, pa + w],
@@ -92,21 +81,18 @@ def _near_kernel(term_a: str, term_b: str, window: int):
             keys_b, lo, side="left"
         )
         if not cnt.any():
-            return empty
+            return None
         docs = keys_a >> _POS_BITS
         uniq, inv = np.unique(docs, return_inverse=True)
         sums = np.bincount(inv, weights=cnt).astype(np.int64)
         keep = sums > 0
         mdoc = uniq[keep]
         # doc_len lookup: one posting per (term, doc) -> dl_ids unique asc
-        dl_idx = np.searchsorted(dl_ids, mdoc)
-        return pd.DataFrame(
-            {
-                "doc_id": mdoc,
-                "pair_count": sums[keep],
-                "doc_len": dl_vals[dl_idx].astype(np.int64),
-            }
-        )
+        return {
+            "doc_id": mdoc,
+            "pair_count": sums[keep],
+            "doc_len": dl_vals[np.searchsorted(dl_ids, mdoc)],
+        }
 
     return shard
 
@@ -125,9 +111,10 @@ def _near_all(
     if not (1 <= int(window) <= MAX_WINDOW):
         raise ValueError(f"NEAR window must be in [1, {MAX_WINDOW}]")
     scan = segment_scan(spark, store, [term_a, term_b])
-    return scan.groupBy("drange").applyInPandas(
+    return shard_map(
+        scan,
         _near_kernel(term_a, term_b, int(window)),
-        schema="doc_id long, pair_count long, doc_len long",
+        "doc_id long, pair_count long, doc_len long",
     )
 
 
@@ -147,12 +134,12 @@ def near_matches(
 
 
 def _near_chain_kernel(terms: list[str], window: int):
-    """applyInPandas kernel over ONE doc-range's segment rows for the
-    ORDERED n-term span chain: emits (doc_id, chain_count, doc_len) where
-    ``chain_count`` = |{p1 : exists p1 < p2 < ... < pn, term_i at p_i,
-    pn - p1 <= window}| — the number of first-term anchors that open a
-    valid ordered span (Lucene SpanNearQuery inOrder=true semantics with
-    the span bound as the window).
+    """Shard kernel (see ``phrase.shard_map``) over ONE doc-range's segment
+    rows for the ORDERED n-term span chain: emits (doc_id, chain_count,
+    doc_len) where ``chain_count`` = |{p1 : exists p1 < p2 < ... < pn,
+    term_i at p_i, pn - p1 <= window}| — the number of first-term anchors
+    that open a valid ordered span (Lucene SpanNearQuery inOrder=true
+    semantics with the span bound as the window).
 
     Greedy-minimal chaining is exact here: taking the SMALLEST next
     position > current at every link minimizes the final position, so an
@@ -161,33 +148,18 @@ def _near_chain_kernel(terms: list[str], window: int):
     Per-link-gap semantics would NOT admit this greedy argument — span is
     both the Lucene model and the vectorizable one."""
 
-    empty = pd.DataFrame(
-        {
-            "doc_id": pd.Series(dtype="int64"),
-            "chain_count": pd.Series(dtype="int64"),
-            "doc_len": pd.Series(dtype="int64"),
-        }
-    )
-
-    def shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        parts_of = decode_segment_parts(pdf)
+    def shard(table) -> dict | None:
+        parts_of = decode_segment_parts(table)
         if any(t not in parts_of for t in terms):
-            return empty
-
-        def ids_of(t: str) -> np.ndarray:
-            ps = parts_of[t]
-            if len(ps) == 1:
-                return ps[0]["ids"]
-            return np.concatenate([p["ids"] for p in ps])
-
-        cand = ids_of(terms[0])
+            return None
+        cand = part_ids(parts_of[terms[0]])
         for t in terms[1:]:
-            cand = np.intersect1d(cand, ids_of(t), assume_unique=True)
+            cand = np.intersect1d(cand, part_ids(parts_of[t]), assume_unique=True)
             if cand.size == 0:
-                return empty
+                return None
         gathered = [gather_candidate_keys(parts_of[t], cand) for t in terms]
         if any(g is None for g in gathered):
-            return empty
+            return None
         keys0, dl_ids, dl_vals = gathered[0]
         # greedy chain walk over composite (doc << _POS_BITS | pos) keys:
         # one searchsorted per link, no per-doc Python. A link that walks
@@ -203,21 +175,17 @@ def _near_chain_kernel(terms: list[str], window: int):
             chain = np.where(oob, chain, nxt[np.minimum(j, nxt.size - 1)])
             dead |= oob
             if dead.all():
-                return empty
+                return None
         ok = ~dead & (chain - keys0 <= window)
         if not ok.any():
-            return empty
+            return None
         docs = keys0[ok] >> _POS_BITS
         uniq, inv = np.unique(docs, return_inverse=True)
-        counts = np.bincount(inv).astype(np.int64)
-        dl_idx = np.searchsorted(dl_ids, uniq)
-        return pd.DataFrame(
-            {
-                "doc_id": uniq,
-                "chain_count": counts,
-                "doc_len": dl_vals[dl_idx].astype(np.int64),
-            }
-        )
+        return {
+            "doc_id": uniq,
+            "chain_count": np.bincount(inv),
+            "doc_len": dl_vals[np.searchsorted(dl_ids, uniq)],
+        }
 
     return shard
 
@@ -235,9 +203,10 @@ def _near_chain_all(
     if not (1 <= int(window) <= MAX_WINDOW):
         raise ValueError(f"NEAR window must be in [1, {MAX_WINDOW}]")
     scan = segment_scan(spark, store, terms)
-    return scan.groupBy("drange").applyInPandas(
+    return shard_map(
+        scan,
         _near_chain_kernel(list(terms), int(window)),
-        schema="doc_id long, chain_count long, doc_len long",
+        "doc_id long, chain_count long, doc_len long",
     )
 
 

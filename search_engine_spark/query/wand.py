@@ -8,10 +8,11 @@ time (codec.py).
 
 Distribution model: segments are grouped by ``drange`` (docID range shard).
 Each shard holds every query term's postings restricted to its range, so
-the block-max traversal (``blockmax_topk_segments``) is shard-local; each
-shard emits its local
-top-k and the driver merge is ``TakeOrderedAndProject`` over shards — the
-two-level top-k from SURVEY.md §3.1.
+the block-max traversal (``blockmax_topk_segments``) is shard-local and
+runs behind the serve path's one Arrow shard boundary (``phrase.shard_map``);
+each shard emits its local top-k and the driver merge is
+``TakeOrderedAndProject`` over shards — the two-level top-k from SURVEY.md
+§3.1.
 
 Correctness with ties: docIDs are traversed ascending and ties break by
 doc_id ascending, so pruning with ``upper_bound <= threshold`` (strict
@@ -24,7 +25,6 @@ import heapq
 from collections import Counter
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from ..index.build import term_bucket_py
 from ..index.codec import BM25_B, BM25_K1, PostingSegment
 from ..index.storage import IndexStore
+from .phrase import shard_map
 
 
 def _seg_entries(bufs) -> list[tuple[bytes, float]]:
@@ -369,11 +370,12 @@ def bm25_topk_wand(
         .select("term", "drange", "postings", "chunk")
     )
 
-    def shard_wand(pdf: pd.DataFrame) -> pd.DataFrame:
+    def shard_wand(table: pa.Table) -> dict:
         term_segments: dict[str, list] = {}
-        for term, buf, chunk in zip(pdf["term"], pdf["postings"], pdf["chunk"]):
-            scale = b_scales.value.get(int(chunk), 1.0)
-            term_segments.setdefault(term, []).append((bytes(buf), scale))
+        cols = table.select(["term", "postings", "chunk"]).to_pydict()
+        for term, buf, chunk in zip(*cols.values()):
+            scale = b_scales.value.get(chunk, 1.0)
+            term_segments.setdefault(term, []).append((buf, scale))
         bl = b_excl.value
         if bl is None:
             top = blockmax_topk_segments(
@@ -385,19 +387,17 @@ def bm25_topk_wand(
                 term_segments, b_weights.value, avgdl, k, suspect_of=bl,
                 boost=boost,
             )
-        return pd.DataFrame(
-            {
-                "doc_id": [d for d, _ in top] + [d for d, _ in sus],
-                "score": [s for _, s in top] + [s for _, s in sus],
-                "suspect": [False] * len(top) + [True] * len(sus),
-                "spilled": [spilled] * (len(top) + len(sus)),
-            }
-        ).astype({"doc_id": "int64", "score": "float64", "suspect": "bool",
-                  "spilled": "bool"})
+        return {
+            "doc_id": [d for d, _ in top] + [d for d, _ in sus],
+            "score": [s for _, s in top] + [s for _, s in sus],
+            "suspect": [False] * len(top) + [True] * len(sus),
+            "spilled": [spilled] * (len(top) + len(sus)),
+        }
 
-    local = segs.groupBy("drange").applyInPandas(
+    local = shard_map(
+        segs,
         shard_wand,
-        schema="doc_id long, score double, suspect boolean, spilled boolean",
+        "doc_id long, score double, suspect boolean, spilled boolean",
     )
     if bloom is None:
         return (

@@ -168,6 +168,24 @@ def test_pagerank_converges_and_sums_to_one(spark):
     assert ranks[1] > ranks[2]  # 1 gets 0's endorsement
 
 
+def test_pagerank_size_estimate_stays_small(spark):
+    """Every iteration checkpoints a plan, and the checkpoint keeps
+    Catalyst's size estimate of the plan it replaces. Joining the rank
+    vector twice per iteration squared that estimate each round (over
+    22,000 digits after 10 iterations), until planning alone ran for
+    minutes in BigInteger arithmetic."""
+    import re
+
+    from search_engine_spark.graph.pagerank import pagerank
+
+    edges = [(i, 0) for i in range(1, 6)] + [(0, 1), (0, 9)]
+    edf = spark.createDataFrame(edges, "src long, dst long")
+    ranks = pagerank(edf, epsilon=0.0, max_iter=10)
+    stats = ranks._jdf.queryExecution().optimizedPlan().stats().simpleString()
+    m = re.search(r"sizeInBytes=[\d.]+E\+(\d+)", stats)
+    assert m is None or int(m.group(1)) < 1000, stats
+
+
 def test_conversation_graph_and_popularity_blend(spark, transcripts_df, tmp_path):
     from search_engine_spark.corpus import HEAD_TERMS
     from search_engine_spark.graph.pagerank import (

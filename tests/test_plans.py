@@ -127,3 +127,31 @@ def test_lm_topk_has_no_window_exchange(spark, index_store):
     plan = _plan(df)
     assert "Window" not in plan
     assert "TakeOrderedAndProject" in plan
+
+
+def test_serve_kernels_cross_one_arrow_boundary(spark, index_store, oracle_index):
+    """WAND, phrase, NEAR, NEAR chain and the logical-query phrase kernel
+    all run through ``phrase.shard_map``: the executed plan of each holds
+    the Arrow grouped-map node and no pandas one."""
+    from search_engine_spark.analysis import analyze_query
+    from search_engine_spark.query.phrase import phrase_matches_multi, phrase_topk
+    from search_engine_spark.query.proximity import near_chain_topk, near_topk
+    from search_engine_spark.query.wand import bm25_topk_wand
+
+    a, b = analyze_query("spark index")
+    served = {
+        "wand": bm25_topk_wand(spark, index_store, [a, b], k=5),
+        "phrase": phrase_topk(spark, index_store, [a, b], k=5),
+        "near": near_topk(spark, index_store, a, b, 3, k=5),
+        "near_chain": near_chain_topk(
+            spark, index_store, sorted(oracle_index.positions)[:3], 5, k=5
+        ),
+        "logical": phrase_matches_multi(
+            spark, index_store, [[a, b], analyze_query("query model")]
+        ),
+    }
+    for name, df in served.items():
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "FlatMapGroupsInArrow" in plan, (name, plan)
+        assert "FlatMapGroupsInPandas" not in plan, (name, plan)
