@@ -12,8 +12,8 @@ DataFrame job:
       -> groupBy(doc_id) doc_len                            [A6]
       -> groupBy(term) df + idf in the SAME job             [A3+A5 — the
          reference's second pass disappears]
-      -> repartition by (term-bucket, doc-range) -> applyInPandas encode
-         (delta+varbyte, block-max metadata)                [S8 replacement]
+      -> repartition by (term-bucket, doc-range) -> one mapInArrow encode
+         pass (delta+varbyte, block-max metadata)           [S8 replacement]
       -> partitioned parquet segments + per-partition lineage/metrics
          manifest (checkpoint-resumable)
 
@@ -318,7 +318,7 @@ def build_term_stats(postings: DataFrame, n_docs: int) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Encoded segment build (applyInPandas per (term, drange) group)
+# Encoded segment build (one mapInArrow pass over (term, drange) groups)
 # ---------------------------------------------------------------------------
 
 SEGMENT_SCHEMA = (
@@ -343,10 +343,10 @@ def encode_segments(
     drange_span regardless of term df (SURVEY.md §4 "skew handling").
 
     Execution: repartition by group key + sortWithinPartitions, then ONE
-    streaming mapInPandas pass that slices group boundaries with numpy and
-    carries the split tail group across Arrow batches — avoiding
-    applyInPandas' per-group invocation overhead (the Zipf tail has millions
-    of tiny term groups at scale).
+    streaming mapInArrow pass that slices group boundaries with numpy and
+    carries the split tail group across Arrow batches — avoiding a
+    per-group UDF invocation (the Zipf tail has millions of tiny term
+    groups at scale).
     """
     spark = postings.sparkSession
     # 4x the core count (scale-adaptive, not a local constant): encode

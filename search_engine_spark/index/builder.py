@@ -146,6 +146,7 @@ def build_index(
             {
                 "format_version": FORMAT_VERSION,
                 "n_docs": n_docs,
+                "next_doc_id": n_docs,
                 "avgdl": corpus_avgdl,
                 "drange_span": int(drange_span),
                 "n_buckets": n_buckets,

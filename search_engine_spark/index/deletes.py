@@ -28,22 +28,31 @@ from pathlib import Path
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .build import encode_segments, build_term_stats, term_bucket_col
-from .storage import IndexStore
+from .storage import IndexStore, _read_cached, read_arrow
 
 
 def tombstones_path(store: IndexStore) -> str:
     return str(store.dir / "tombstones")
 
 
+TOMBSTONES_DDL = "doc_id long"
+
+
 def tombstones(spark: SparkSession, store: IndexStore) -> DataFrame | None:
+    """The tombstoned doc_ids (None when none exist), through the store's
+    reader memo: repeated queries between a delete and its compaction reuse
+    one reader, and every ``mark_deleted`` append invalidates it. An id
+    marked twice appears twice; every consumer is an anti-join, a set or a
+    bloom, which duplicates do not change."""
     p = Path(tombstones_path(store))
     if not (p / "_SUCCESS").exists() and not any(p.glob("*.parquet")):
         return None
-    return spark.read.parquet(str(p)).select("doc_id").distinct()
+    return _read_cached(spark, str(p), TOMBSTONES_DDL)
 
 
 def mark_deleted(
@@ -96,7 +105,7 @@ def tombstone_bloom(spark: SparkSession, store: IndexStore):
     hit = _BLOOM_CACHE.get(key)
     if hit is not None:
         return hit
-    n = tomb.count()
+    n = tomb.count()  # counts repeats: sizes the filter for at least as many ids
     b = bloom_from_df(tomb, "doc_id", n)
     while len(_BLOOM_CACHE) >= _BLOOM_CACHE_MAX:
         _BLOOM_CACHE.pop(next(iter(_BLOOM_CACHE)))
@@ -107,17 +116,17 @@ def tombstone_bloom(spark: SparkSession, store: IndexStore):
 def verify_suspects(
     spark: SparkSession, store: IndexStore, suspect_ids: list[int]
 ) -> set[int]:
-    """Exact check of a SMALL id list against the tombstone table: pushed
-    doc_id IN (...) filter -> parquet row-group skipping, returns the subset
-    that is actually deleted. Only bloom-positive top-k contenders ever get
-    here, so the list stays driver-sized by construction."""
+    """Exact check of a SMALL id list against the tombstone table, read on
+    the driver (no Spark job): returns the subset that is actually deleted.
+    Only bloom-positive top-k contenders ever get here, so the list stays
+    driver-sized by construction."""
     if not suspect_ids:
         return set()
-    tomb = tombstones(spark, store)
-    if tomb is None:
-        return set()
-    rows = tomb.filter(F.col("doc_id").isin([int(i) for i in suspect_ids]))
-    return {int(r["doc_id"]) for r in rows.collect()}
+    found = read_arrow(
+        tombstones_path(store), TOMBSTONES_DDL, ["doc_id"],
+        ds.field("doc_id").isin([int(i) for i in suspect_ids]),
+    )
+    return set(found.column("doc_id").to_pylist())
 
 
 def live_filter(spark: SparkSession, store: IndexStore, df: DataFrame,
@@ -155,8 +164,8 @@ def topk_live(
     fetched as their own top-(k+1) IN THE SAME JOB — the two branches share
     the scoring plan's shuffle via ReuseExchange, so the candidate set is
     scanned and shuffled once — and the k best suspects are verified exactly
-    against the tombstone table with a pushed IN (...) filter (driver-sized
-    by construction). The k+1-th suspect row is a spill sentinel: if it
+    against the tombstone table by a driver read (driver-sized by
+    construction). The k+1-th suspect row is a spill sentinel: if it
     exists AND one of the k best suspects verified deleted, an unfetched
     suspect could in principle qualify (requires mass deletion of the
     current top results plus a bloom false positive beneath them), and the

@@ -54,7 +54,7 @@ def merge_store(
         )
     n_buckets = int(dstats["n_buckets"])
     drange_span = int(dstats["drange_span"])
-    base = int(dstats["n_docs"])
+    base = int(dstats["next_doc_id"])
     new_chunk = max((m["chunk"] for m in dst.manifests()), default=-1) + 1
     prefix = f"m{new_chunk}-"
     for target in (dst.docs_path, dst.postings_path):
@@ -149,6 +149,7 @@ def merge_store(
     dstats.update(
         {
             "n_docs": int(n_docs),
+            "next_doc_id": base + int(sstats["next_doc_id"]),
             "avgdl": avgdl,
             "n_chunks": new_chunk + 1,
             "last_append_unix": time.time(),

@@ -16,23 +16,36 @@ abstraction. Layout under ``index_dir``:
     segments/chunk=N/     compressed block-max segments (codec.py) — the WAND
                           path; chunked by drange for checkpoint-resume
     stats/terms/          (term, df, idf, bm25_idf, tbucket) part. by tbucket
-    stats/corpus.json     {format_version, n_docs, avgdl, drange_span,
-                          n_buckets, n_chunks, stem, built_unix
+    stats/corpus.json     {format_version, n_docs, next_doc_id, avgdl,
+                          drange_span, n_buckets, n_chunks, stem, built_unix
                           [, last_append_unix, compacted_unix,
                           last_build_secs]} — ``corpus_stats()`` rejects a
                           store whose format_version is not FORMAT_VERSION
     manifest/chunk_N.json per-chunk lineage + metrics (A11 analog: counters
                           the reference keeps as AtomicInteger,
                           WebCrawler.java:27-29)
+
+Two readers share one fingerprint-invalidated memo: the Spark reader
+(``_read_cached``) for scans, and a driver-side ``pyarrow.dataset`` reader
+(``read_arrow``) for point reads a Spark job would only slow down: the idf
+lookup of uncached query terms (tbucket partition + term filter), the
+enrichment probe of the top-k ids (docs files are written in doc_id order,
+so row-group min/max statistics prune), and the exact check of bloom-suspect
+ids against the tombstones.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import shutil
 from pathlib import Path
 
+import pyarrow as pa
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 # The one on-disk format this code reads and writes. ``build_index`` stamps
@@ -40,8 +53,11 @@ from pyspark.sql import DataFrame, SparkSession
 # it when the layout changes, so a store of another format fails at its
 # first stats read instead of deep inside a kernel. Version 1: unified
 # postings table, term_stats with the build-time ``cf`` column, segments
-# with the block-skippable positional stream.
-FORMAT_VERSION = 1
+# with the block-skippable positional stream. Version 2: corpus.json
+# carries ``next_doc_id``, the docID high-water mark that appends and
+# merges start from (compaction keeps the survivors' ids, so n_docs, the
+# live count, is not the next free id, and no id is ever reused).
+FORMAT_VERSION = 2
 
 
 class StoreFormatError(RuntimeError):
@@ -87,7 +103,9 @@ def _read_or_empty(spark: SparkSession, path: str, fallback_ddl: str) -> DataFra
 # constructs 2-3 readers — ~40% of a served query's latency was re-listing
 # unchanged directories. The memo caches the constructed DataFrame (the
 # UNRESOLVED plan + file index — never rows; every action still computes
-# from parquet) per (session, path), invalidated by a shallow filesystem
+# from parquet) per (session, path), and the driver-side Arrow dataset
+# (``read_arrow``; file list + schema, never rows) per path, each
+# invalidated by a shallow filesystem
 # fingerprint: names, sizes, and mtimes of the artifact's dirs AND files
 # (single-digit ms; see _dir_fingerprint). Every mutation path changes
 # it — full overwrites and replace_dir swap the file set; streaming
@@ -96,7 +114,7 @@ def _read_or_empty(spark: SparkSession, path: str, fallback_ddl: str) -> DataFra
 # This is the open-IndexReader analog every production engine holds.
 # ---------------------------------------------------------------------------
 
-_READER_CACHE: dict[tuple, tuple[tuple, DataFrame]] = {}
+_READER_CACHE: dict[tuple, tuple[tuple, DataFrame | ds.Dataset]] = {}
 _READER_CACHE_MAX = 64
 
 
@@ -141,21 +159,64 @@ def _dir_fingerprint(path: str) -> tuple | None:
     return tuple(parts)
 
 
+def _memoized(key: tuple, fp: tuple, make):
+    hit = _READER_CACHE.get(key)
+    if hit is not None and hit[0] == fp:
+        return hit[1]
+    reader = make()
+    while len(_READER_CACHE) >= _READER_CACHE_MAX:
+        _READER_CACHE.pop(next(iter(_READER_CACHE)))
+    _READER_CACHE[key] = (fp, reader)
+    return reader
+
+
 def _read_cached(spark: SparkSession, path: str, fallback_ddl: str) -> DataFrame:
     fp = _dir_fingerprint(path)
     if fp is None:  # missing dir: empty-frame fallback, never cached
         return _read_or_empty(spark, path, fallback_ddl)
     # per session, not per application (newSession() shares the context);
     # the cached frame holds its session, so the id cannot be reused
-    key = (id(spark), path)
-    hit = _READER_CACHE.get(key)
-    if hit is not None and hit[0] == fp:
-        return hit[1]
-    df = _read_or_empty(spark, path, fallback_ddl)
-    while len(_READER_CACHE) >= _READER_CACHE_MAX:
-        _READER_CACHE.pop(next(iter(_READER_CACHE)))
-    _READER_CACHE[key] = (fp, df)
-    return df
+    return _memoized(
+        (id(spark), path), fp,
+        lambda: _read_or_empty(spark, path, fallback_ddl),
+    )
+
+
+@functools.lru_cache(maxsize=None)
+def _arrow_schema(ddl: str) -> pa.Schema:
+    return to_arrow_schema(StructType.fromDDL(ddl))
+
+
+# Spark writes timestamps as int96 by default; read them at microseconds so
+# the scan's cast to the DDL type (timestamp[us, tz=UTC]: Spark stores UTC
+# instants) neither truncates nor overflows
+_PARQUET = ds.ParquetFileFormat(
+    read_options={"coerce_int96_timestamp_unit": "us"}
+)
+
+
+def read_arrow(
+    path: str, ddl: str, columns: list[str], filter: ds.Expression
+) -> pa.Table:
+    """Point read on the driver, no Spark job: ``columns`` of the rows of
+    the artifact at ``path`` that match ``filter``, typed by the artifact's
+    DDL. A missing or empty dir reads as an empty table. The dataset (file
+    listing, hive partitions; ``_``/``.`` files ignored) is memoized next
+    to the Spark readers under the same fingerprint. Partition filters
+    skip directories; comparisons (not ``is_in``) also skip row groups by
+    their min/max statistics. Only for driver-sized results: scans stay in
+    Spark."""
+    schema = _arrow_schema(ddl)
+    fp = _dir_fingerprint(path)
+    if fp is None:
+        return schema.empty_table().select(columns)
+    dataset = _memoized(
+        ("arrow", path), fp,
+        lambda: ds.dataset(
+            path, schema=schema, format=_PARQUET, partitioning="hive"
+        ),
+    )
+    return dataset.to_table(columns=columns, filter=filter)
 
 
 class IndexStore:

@@ -9,14 +9,17 @@ over compressed segments) — both rank-identical.
 
 from __future__ import annotations
 
+import functools
+import operator
 import re
 
 import pyarrow as pa
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..analysis.analyzer import tokenize
-from ..index.storage import IndexStore
+from ..index.storage import DOCS_DDL, IndexStore, read_arrow
 from .bm25 import bm25_topk
 from .logical import combine
 from .parser import _WILDCARD_RE, ParsedQuery, parse_query
@@ -30,6 +33,7 @@ _RESULT_DDL = (
     "role string, ts timestamp, snippet string"
 )
 _RESULT_COLS = [f.split()[0] for f in _RESULT_DDL.split(", ")]
+_PROBE_COLS = ["doc_id", "conv_id", "turn_idx", "role", "ts", "text"]
 
 
 def _score_side(
@@ -79,14 +83,19 @@ def _expand_terms(
 
 def docs_probe(
     spark: SparkSession, store: IndexStore, ids: list[int]
-) -> DataFrame:
+) -> pa.Table:
     """The enrichment read: the six columns a result row needs, for the
-    top-k doc ids only (a pushed IN filter, so parquet skips row groups
-    instead of scanning the registry)."""
-    return (
-        store.docs(spark)
-        .filter(F.col("doc_id").isin(ids))
-        .select("doc_id", "conv_id", "turn_idx", "role", "ts", "text")
+    top-k doc ids only, read on the driver (no Spark job). ``ts`` comes
+    back as a UTC instant. One equality per id rather than an ``is_in``:
+    row groups are skipped by their doc_id min/max only for comparisons,
+    and the docs files are written in doc_id order, so the probe opens
+    only the row groups that hold the ids (k equalities stay cheap)."""
+    return read_arrow(
+        store.docs_path, DOCS_DDL, _PROBE_COLS,
+        functools.reduce(
+            operator.or_, (ds.field("doc_id") == int(i) for i in ids),
+            ds.scalar(False),
+        ),
     )
 
 
@@ -216,21 +225,21 @@ def search(
         return topk
 
     # enrich the k rows only (J7/S6), on the driver. The k scored rows are
-    # collected (tiny by construction); ONE docs probe fetches their
-    # metadata and text as Arrow; snippets are built over <= k texts; the
-    # result is an Arrow-built local relation, so collecting it launches no
-    # further Spark job. Inner-join semantics: a doc missing from the
-    # registry is dropped, ranks stay dense. Arrow in, Arrow out keeps `ts`
-    # an instant — a detour through collected Rows would re-read it in the
-    # process time zone.
+    # collected (tiny by construction) — the query's last Spark job; ONE
+    # docs probe reads their metadata and text straight from the docs
+    # parquet as Arrow, pruned to the row groups holding the ids; snippets
+    # are built over <= k texts; the result is an Arrow-built local
+    # relation, so collecting it launches no further Spark job.
+    # Inner-join semantics: a doc missing from the registry is dropped,
+    # ranks stay dense. Arrow in, Arrow out keeps `ts` a UTC instant — a
+    # detour through collected Rows would re-read it in the process time
+    # zone.
     top_rows = topk.collect()
     if not top_rows:
         return spark.createDataFrame(
             pa.table({c: [] for c in _RESULT_COLS}), _RESULT_DDL
         )
-    probe = docs_probe(
-        spark, store, [int(r["doc_id"]) for r in top_rows]
-    ).toArrow()
+    probe = docs_probe(spark, store, [int(r["doc_id"]) for r in top_rows])
     at = {d: i for i, d in enumerate(probe.column("doc_id").to_pylist())}
     hits = [r for r in top_rows if int(r["doc_id"]) in at]
     docs = probe.take([at[int(r["doc_id"])] for r in hits])

@@ -26,12 +26,13 @@ from collections import Counter
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..index.build import term_bucket_py
 from ..index.codec import BM25_B, BM25_K1, PostingSegment
-from ..index.storage import IndexStore
+from ..index.storage import TERM_STATS_DDL, IndexStore, read_arrow
 from .phrase import shard_map
 
 
@@ -279,20 +280,19 @@ def _cached_term_idf(
         cache = _IDF_CACHE[key] = {}
     missing = sorted(t for t in set(terms) if t not in cache)
     if missing:
+        # a point read on the driver (no Spark job) of the query terms'
+        # tbucket partitions only
         buckets = sorted({term_bucket_py(t, n_buckets) for t in missing})
-        rows = (
-            store.term_stats(spark)
-            .filter(F.col("tbucket").isin(buckets))
-            .filter(F.col("term").isin(missing))
-            .select("term", "bm25_idf")
-            .collect()
-        )
+        found = read_arrow(
+            store.term_stats_path, TERM_STATS_DDL, ["term", "bm25_idf"],
+            ds.field("tbucket").isin(buckets) & ds.field("term").isin(missing),
+        ).to_pydict()
         if len(cache) + len(missing) > _IDF_CACHE_MAX_TERMS:
             cache.clear()
         for t in missing:
             cache[t] = None
-        for r in rows:
-            cache[r["term"]] = float(r["bm25_idf"])
+        for t, idf in zip(found["term"], found["bm25_idf"]):
+            cache[t] = float(idf)
     return {t: cache.get(t) for t in set(terms)}
 
 
@@ -321,13 +321,14 @@ def bm25_topk_wand(
     buckets = sorted({term_bucket_py(t, n_buckets) for t in uniq})
 
     # per-term idf from the driver-side stats cache (the reference's
-    # in-memory GlobalStats analog). Measured alternatives at the 3.9M-turn
-    # index: a fresh pruned-scan collect costs ~0.6 s per query; joining the
-    # weights onto the segment rows as an in-job broadcast costs ~0.6 s MORE
-    # than the collect (the broadcast exchange adds a full AQE stage). The
-    # cache makes repeat queries pay neither. Uses the STORED bm25_idf
-    # column — the very value the DataFrame path scores with, so engine
-    # parity does not lean on np.log and JVM log agreeing to the last ulp.
+    # in-memory GlobalStats analog); a miss is a driver read of the terms'
+    # stats partitions, not a Spark job. Measured alternatives at the
+    # 3.9M-turn index: a pruned-scan collect costs ~0.6 s per query; joining
+    # the weights onto the segment rows as an in-job broadcast costs ~0.6 s
+    # MORE than the collect (the broadcast exchange adds a full AQE stage).
+    # Uses the STORED bm25_idf column — the very value the DataFrame path
+    # scores with, so engine parity does not lean on np.log and JVM log
+    # agreeing to the last ulp.
     idf_of = _cached_term_idf(spark, store, uniq, n_buckets)
     weights = {
         t: qtf[t] * idf_of[t] for t in uniq if idf_of.get(t) is not None
@@ -408,7 +409,7 @@ def bm25_topk_wand(
     # exact suspect resolution: the per-shard suspect lists are bounded to k
     # entries each (driver-sized by construction even under mass deletion of
     # the top results), so materialize once, verify the suspect ids against
-    # the tombstone table with a pushed IN (...) filter, and take the final
+    # the tombstone table with a driver read, and take the final
     # top-k over live ∪ verified-live.
     rows = local.collect()
     verified_deleted = verify_suspects(

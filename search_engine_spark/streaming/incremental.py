@@ -73,7 +73,7 @@ def append_batch(
         base = int(ledger["inflight"][key]["base"])
         new_chunk = int(ledger["inflight"][key]["chunk"])
     else:
-        base = cstats["n_docs"]
+        base = cstats["next_doc_id"]
         new_chunk = max((m["chunk"] for m in store.manifests()), default=-1) + 1
         if key is not None:
             ledger["inflight"][key] = {"base": base, "chunk": new_chunk}
@@ -178,8 +178,8 @@ def append_batch(
         df_.unpersist()
 
     cstats.update(
-        {"n_docs": n_docs, "avgdl": avgdl, "n_chunks": new_chunk + 1,
-         "last_append_unix": time.time()}
+        {"n_docs": n_docs, "next_doc_id": base + n_new, "avgdl": avgdl,
+         "n_chunks": new_chunk + 1, "last_append_unix": time.time()}
     )
     store.write_corpus_stats(cstats)
     # commit: inflight -> committed (atomic ledger rewrite)

@@ -123,3 +123,28 @@ def test_compaction_restores_fresh_build_semantics(
             ).collect()
         ]
         assert got == exp, engine
+
+
+def test_batches_after_compaction_start_past_the_largest_id(spark, tmp_path):
+    """Compaction keeps the survivors' ids, so n_docs falls below the
+    largest live id: an appended or merged batch must start past that id,
+    or its docs take the ids of live ones."""
+    from search_engine_spark.index.merge import merge_store
+    from search_engine_spark.streaming.incremental import append_batch
+
+    def built(name, n_convs, seed):
+        return build_index(
+            spark, spark.createDataFrame(generate_pandas(n_convs, seed=seed)),
+            str(tmp_path / name), drange_span=64,
+        )
+
+    store = built("ix", 6, 3)
+    n = store.corpus_stats()["n_docs"]
+    mark_deleted(spark, store, [0, n - 1])
+    compact(spark, store)
+    n_new = append_batch(
+        spark, store, spark.createDataFrame(generate_pandas(2, seed=4))
+    )
+    n_new += merge_store(spark, store, built("src", 2, 5))
+    ids = sorted(r["doc_id"] for r in store.docs(spark).collect())
+    assert ids == list(range(1, n - 1)) + list(range(n, n + n_new))

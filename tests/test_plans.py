@@ -3,7 +3,7 @@ visible in `.explain` output — partition pruning on term buckets, parquet
 filter pushdown, broadcast joins for small sides, TakeOrderedAndProject for
 top-k (SURVEY.md §4)."""
 
-import re
+from pathlib import Path
 
 from pyspark.sql import functions as F
 
@@ -68,20 +68,45 @@ def test_positions_scan_prunes_partitions(spark, index_store):
     assert "tbucket" in plan.split("PartitionFilters", 1)[1].split("\n", 1)[0]
 
 
-def test_enrichment_probe_pushes_doc_id_filter(spark, index_store):
+def test_enrichment_probe_reads_only_the_ids_row_groups(
+    spark, index_store, monkeypatch
+):
     """Metadata enrichment must not scan the whole doc registry for k rows:
-    the docs probe carries a pushed doc_id IN filter (row-group skipping)
-    and reads only the six columns a result row needs."""
-    from search_engine_spark.query.pipeline import docs_probe
+    the driver-side docs probe returns exactly the requested ids and the
+    six columns a result row needs (``ts`` a UTC instant), and its pushed
+    filter skips every docs file that holds none of the ids (the files are
+    written in doc_id order, so row-group statistics prune)."""
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
 
-    plan = _plan(docs_probe(spark, index_store, [3, 1, 4]))
-    assert "/docs]" in plan, plan
-    pushed = plan.split("PushedFilters", 1)[1].split("\n", 1)[0]
-    assert "In(doc_id" in pushed, plan
-    read = plan.split("ReadSchema", 1)[1].split("\n", 1)[0]
-    assert set(re.findall(r"[<,](\w+):", read)) == {
+    from search_engine_spark.query import pipeline
+
+    files = sorted(Path(index_store.docs_path).glob("*.parquet"))
+    assert len(files) >= 2, files
+    ids = pq.read_table(files[-1], columns=["doc_id"]).column("doc_id")
+    ids = ids.to_pylist()[:3]
+    pushed = []
+    read = pipeline.read_arrow
+    monkeypatch.setattr(
+        pipeline, "read_arrow",
+        lambda path, ddl, cols, flt: pushed.append(flt) or read(
+            path, ddl, cols, flt
+        ),
+    )
+    probe = pipeline.docs_probe(spark, index_store, ids + [10**9])
+    assert sorted(probe.column("doc_id").to_pylist()) == sorted(ids)
+    assert probe.column_names == [
         "doc_id", "conv_id", "turn_idx", "role", "ts", "text"
-    }, read
+    ]
+    assert probe.schema.field("ts").type == pa.timestamp("us", tz="UTC")
+    (flt,) = pushed
+    touched = [
+        f.path
+        for f in ds.dataset(index_store.docs_path).get_fragments()
+        if f.subset(filter=flt).num_row_groups
+    ]
+    assert touched == [str(files[-1])], touched
 
 
 def test_wand_segment_scan_prunes_by_term(spark, index_store):

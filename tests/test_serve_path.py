@@ -13,18 +13,20 @@ import time
 import pandas as pd
 import pytest
 
-from search_engine_spark.query import pipeline
+from search_engine_spark.index.deletes import mark_deleted, verify_suspects
+from search_engine_spark.index.storage import IndexStore
+from search_engine_spark.query import pipeline, wand
 from search_engine_spark.query.pipeline import search
 
 # class -> (query, engine, jobs of a warm search(...).collect())
 CLASSES = {
-    "wand": ("baba coba spark", "wand", 3),
-    "df": ("baba coba spark", "df", 5),
-    "prefix": ("bab*", "wand", 3),
-    "phrase": ('"baba coba"', "df", 5),
-    "near": ("baba NEAR/3 daba", "df", 5),
-    "binary": ('"baba coba" AND "daba baba"', "df", 9),
-    "nested": ('("baba coba" OR "fenba baba") NOT "gorba baba"', "df", 13),
+    "wand": ("baba coba spark", "wand", 2),
+    "df": ("baba coba spark", "df", 4),
+    "prefix": ("bab*", "wand", 2),
+    "phrase": ('"baba coba"', "df", 4),
+    "near": ("baba NEAR/3 daba", "df", 4),
+    "binary": ('"baba coba" AND "daba baba"', "df", 8),
+    "nested": ('("baba coba" OR "fenba baba") NOT "gorba baba"', "df", 12),
 }
 
 _group = itertools.count()
@@ -56,6 +58,45 @@ def test_search_job_count(spark, index_store, cls):
     assert rows, f"{cls}: {query!r} matched nothing on the fixture"
     assert n_collect == 0, f"{cls}: collecting the result ran {n_collect} jobs"
     assert n_search == expected, f"{cls}: {n_search} jobs, pinned {expected}"
+
+
+def test_cold_idf_cache_adds_no_job(spark, index_store):
+    """Query terms missing from the idf cache are looked up on the driver:
+    a WAND query over never-queried terms launches as many jobs cold as
+    warm."""
+    query, engine, expected = CLASSES["wand"]
+    search(spark, index_store, query, k=10, engine=engine)  # warm readers
+    fresh = "venba drosel"
+    wand._IDF_CACHE.clear()
+    df, n_cold = _jobs(spark, lambda: search(
+        spark, index_store, fresh, k=10, engine=engine
+    ))
+    assert df.collect(), f"{fresh!r} matched nothing on the fixture"
+    _, n_warm = _jobs(spark, lambda: search(
+        spark, index_store, fresh, k=10, engine=engine
+    ))
+    assert n_cold == n_warm == expected, (n_cold, n_warm)
+
+
+def test_point_lookups_launch_no_job(spark, index_store, tmp_path):
+    """The idf lookup of uncached terms, the enrichment probe and the
+    tombstone check of bloom suspects are driver reads of the parquet."""
+    wand._IDF_CACHE.clear()
+    n_buckets = index_store.corpus_stats()["n_buckets"]
+    idf, n = _jobs(spark, lambda: wand._cached_term_idf(
+        spark, index_store, ["baba", "nosuchterm"], n_buckets
+    ))
+    assert n == 0 and idf["baba"] > 0 and idf["nosuchterm"] is None
+    probe, n = _jobs(spark, lambda: pipeline.docs_probe(
+        spark, index_store, [3, 1, 4]
+    ))
+    assert n == 0 and sorted(probe.column("doc_id").to_pylist()) == [1, 3, 4]
+    store = IndexStore(str(tmp_path / "ix"))
+    mark_deleted(spark, store, [5, 7])
+    deleted, n = _jobs(spark, lambda: verify_suspects(
+        spark, store, [4, 5, 6, 7]
+    ))
+    assert n == 0 and deleted == {5, 7}
 
 
 @pytest.fixture

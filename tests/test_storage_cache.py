@@ -71,3 +71,19 @@ def test_memo_is_per_session(spark, tmp_path):
     assert store.postings(other) is b
     assert store.postings(spark) is a
     assert b.count() == 3
+
+
+def test_tombstone_reader_is_memoized(spark, tmp_path):
+    """Queries between a delete and its compaction reuse one tombstone
+    reader; every mark_deleted append invalidates it."""
+    from search_engine_spark.index.deletes import mark_deleted, tombstones
+
+    store = _mk_store(tmp_path)
+    assert tombstones(spark, store) is None
+    mark_deleted(spark, store, [1, 2])
+    a = tombstones(spark, store)
+    assert tombstones(spark, store) is a
+    mark_deleted(spark, store, [3])
+    b = tombstones(spark, store)
+    assert b is not a
+    assert sorted(r["doc_id"] for r in b.collect()) == [1, 2, 3]
