@@ -28,7 +28,9 @@ def _write_stats(store: IndexStore, stats: dict) -> None:
     store.corpus_stats_path.write_text(json.dumps(stats))
 
 
-@pytest.mark.parametrize("version", [None, 0, FORMAT_VERSION + 1])
+@pytest.mark.parametrize(
+    "version", [None, 0, FORMAT_VERSION - 1, FORMAT_VERSION + 1]
+)
 def test_other_format_is_refused_by_name(tmp_path, version):
     store = IndexStore(str(tmp_path / "old"))
     stats = {"n_docs": 1, "avgdl": 1.0, "n_buckets": 64, "stem": True}
