@@ -2042,18 +2042,22 @@ turns AS (
 # (near_match, near_search, wildcard_search, fuzzy_search, more_like_this)
 # hold the places of five analytics rows whose code did not change
 # (events_hourly, pricing_summary, top_revenue_orders, media_meta,
-# frame_sample). The tail is not artifact-independent: beside the
-# adhoc/analytics rows it still holds index-served ones (search_facets,
-# total_hits, explain_topk, filtered_search, spell_suggest).
+# frame_sample). spell_suggest, which routes through gram_index_for and
+# its store_version stamp, holds the place of robots_allowed, whose code
+# did not change. The tail is not artifact-independent: beside
+# the adhoc/analytics rows it still holds index-served ones (search_facets,
+# total_hits, explain_topk, filtered_search) and robots_allowed.
 # Pure reordering: every entry keeps its name, callable, and oracle SQL.
 _ROTATE_FIRST_R6 = [
-    # -- 24 of the 29 rows whose last driver signal was r4 --------------
+    # -- 23 of the 29 rows whose last driver signal was r4 --------------
     "minhash_lsh_pairs", "dup_components", "jaccard_pairs", "simhash_pairs",
     "embedding_dup_pairs", "cosine_topk", "ivf_topk", "lsh_ann_topk",
     "ivf_kmeans_topk", "pagerank", "events_sessions", "stratified_sample",
     "token_counts", "quality_scores", "lang_id", "en_bigram_score",
     "fingerprints", "repetition_scores", "pii_redact", "url_normalize",
-    "robots_allowed", "media_features", "snippet_spans", "highlight_topk",
+    "media_features", "snippet_spans", "highlight_topk",
+    # -- rows routed by the store_version stamp ---------------------------
+    "spell_suggest",
     # -- rows served by the Arrow shard kernels ---------------------------
     "near_match", "near_search", "wildcard_search", "fuzzy_search",
     "more_like_this",

@@ -24,11 +24,13 @@ from .build import (
     N_TERM_BUCKETS,
     assign_doc_ids,
     build_postings,
-    build_term_stats,
-    encode_segments,
+    corpus_counts,
     term_bucket_col,
+    with_terms,
+    write_chunk,
+    write_term_stats,
 )
-from .storage import FORMAT_VERSION, SEGMENTS_DDL, IndexStore, _read_or_empty
+from .storage import FORMAT_VERSION, IndexStore
 
 DEFAULT_DRANGE_SPAN = 1 << 16  # postings per term per range shard bound
 DEFAULT_N_CHUNKS = 4
@@ -56,8 +58,6 @@ def build_index(
             print(f"[build_index] {label}: {now - _t[0]:.1f}s", flush=True)
         _t[0] = now
 
-    from .build import with_terms
-
     # -- stage 1: docs ---------------------------------------------------
     # The analyzer output is persisted in memory and reused by stage 2 so
     # tokenize/stem runs ONCE per document (the reference re-analyzes per
@@ -77,11 +77,7 @@ def build_index(
         tick("stage1 docs")
     docs = store.docs(spark)
 
-    # one job for both corpus statistics (A4 + avgdl)
-    _crow = docs.agg(
-        F.count("*").alias("n"), F.avg("doc_len").alias("avgdl")
-    ).collect()[0]
-    n_docs, corpus_avgdl = _crow["n"], float(_crow["avgdl"] or 0.0)
+    n_docs, corpus_avgdl = corpus_counts(docs)
     tick("count")
     if drange_span is None:
         # target ~64k docs per range shard locally; on a cluster this is
@@ -128,19 +124,7 @@ def build_index(
 
     # -- stage 3: stats ----------------------------------------------------
     if not (resume and store.stage_done("stats/terms")):
-        term_stats = build_term_stats(postings, n_docs).withColumn(
-            "tbucket", term_bucket_col(F.col("term"), n_buckets)
-        )
-        (
-            term_stats.repartition(n_buckets, "tbucket")
-            # term-sorted row groups: dictionary lookups (per-term stats,
-            # prefix expansion, length-banded spell suggestion) skip row
-            # groups via parquet min/max instead of scanning the bucket
-            .sortWithinPartitions("term")
-            .write.mode("overwrite")
-            .partitionBy("tbucket")
-            .parquet(store.term_stats_path)
-        )
+        write_term_stats(postings, n_docs, n_buckets, store.term_stats_path)
         tick("stage3 term_stats")
         store.write_corpus_stats(
             {
@@ -167,52 +151,13 @@ def build_index(
         chunk_postings = postings.filter(
             (F.col("doc_id") / drange_span).cast("long") % n_chunks == chunk
         )
-        segs = encode_segments(chunk_postings, avgdl, drange_span, n_buckets)
-        chunk_path = f"{store.segments_path}/chunk={chunk}"
-        # tbucket partition dirs -> term-lookup queries prune whole buckets.
-        # The encoded rows are small compressed blobs, so clustering them by
-        # bucket first is a cheap shuffle that caps files at n_buckets per
-        # chunk instead of tasks x n_buckets (file commits dominated the
-        # fixed build cost).
-        (
-            segs.repartition(n_buckets, "tbucket")
-            .write.mode("overwrite").partitionBy("tbucket").parquet(chunk_path)
+        payload = write_chunk(
+            spark, chunk_postings, f"{store.segments_path}/chunk={chunk}",
+            chunk, "transcripts", avgdl, drange_span, n_buckets,
         )
         tick(f"chunk {chunk} encode+write")
-        # lineage + metrics from RE-READING the written chunk (A11 analog),
-        # not from a persisted copy of the encoded rows — materializing
-        # ~300 MB of blobs into the block manager alongside the write
-        # measurably serialized the stage at high core counts, and the
-        # read-back agg is a column-pruned local scan. Written AFTER the
-        # chunk's _SUCCESS so chunk_done => both exist.
-        m = _read_or_empty(spark, chunk_path, SEGMENTS_DDL).agg(
-            F.count("*").alias("n_segments"),
-            F.sum("df_local").alias("n_postings"),
-            F.countDistinct("term").alias("n_terms"),
-            F.countDistinct("drange").alias("n_dranges"),
-            F.sum(F.length("postings")).alias("bytes"),
-        F.sum(F.length("positions")).alias("pos_bytes"),
-            F.min("first_doc_id").alias("min_doc_id"),
-            F.max("last_doc_id").alias("max_doc_id"),
-        ).collect()[0]
-        store.write_manifest(
-            chunk,
-            {
-                "chunk": chunk,
-                "input": "transcripts",
-                "drange_span": drange_span,
-                "encode_avgdl": avgdl,
-                "n_segments": m["n_segments"],
-                "n_postings": int(m["n_postings"] or 0),
-                "n_terms": m["n_terms"],
-                "n_dranges": m["n_dranges"],
-                "bytes": int(m["bytes"] or 0),
-            "pos_bytes": int(m["pos_bytes"] or 0),
-                "min_doc_id": m["min_doc_id"],
-                "max_doc_id": m["max_doc_id"],
-                "completed_unix": time.time(),
-            },
-        )
+        # written AFTER the chunk's _SUCCESS so chunk_done => both exist
+        store.write_manifest(chunk, payload)
         tick(f"chunk {chunk} manifest")
         if fail_after_chunk is not None and chunk == fail_after_chunk:
             raise RuntimeError(f"injected failure after chunk {chunk}")

@@ -28,12 +28,14 @@ from pathlib import Path
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .build import encode_segments, build_term_stats, term_bucket_col
-from .storage import IndexStore, _read_cached, read_arrow
+from .build import corpus_counts, write_chunk, write_term_stats
+from .storage import (
+    IndexStore, _dir_fingerprint, _memoized, _read_cached, any_equal,
+    read_arrow,
+)
 
 
 def tombstones_path(store: IndexStore) -> str:
@@ -76,41 +78,26 @@ def mark_deleted(
     return len(doc_ids)
 
 
-# memoized per tombstone-dir snapshot (file names + sizes): the bloom is a
-# one-time distributed scan, reused by every subsequent query until the
-# tombstone table changes
-_BLOOM_CACHE: dict[tuple, object] = {}
-_BLOOM_CACHE_MAX = 8
-
-
-def _tombstone_snapshot(store: IndexStore) -> tuple:
-    p = Path(tombstones_path(store))
-    return tuple(
-        sorted((f.name, f.stat().st_size) for f in p.glob("*.parquet"))
-    )
-
-
 def tombstone_bloom(spark: SparkSession, store: IndexStore):
     """Bloom filter over the tombstoned doc_ids (None when none exist).
     Scale story: the id set NEVER reaches the driver — per-partition bitmaps
     are OR-merged (index.bloom), and the result is a fixed-size broadcast.
     Bloom-positive docs are exactly verified downstream (no false
-    negatives -> bloom-negative docs are certainly live)."""
+    negatives -> bloom-negative docs are certainly live). Built once per
+    tombstone table: an entry of the store memo, keyed by the tombstones
+    dir's fingerprint, which every ``mark_deleted`` append and every
+    compaction changes."""
     tomb = tombstones(spark, store)
     if tomb is None:
         return None
     from .bloom import bloom_from_df
 
-    key = (str(store.dir), _tombstone_snapshot(store))
-    hit = _BLOOM_CACHE.get(key)
-    if hit is not None:
-        return hit
-    n = tomb.count()  # counts repeats: sizes the filter for at least as many ids
-    b = bloom_from_df(tomb, "doc_id", n)
-    while len(_BLOOM_CACHE) >= _BLOOM_CACHE_MAX:
-        _BLOOM_CACHE.pop(next(iter(_BLOOM_CACHE)))
-    _BLOOM_CACHE[key] = b
-    return b
+    path = tombstones_path(store)
+    # count() counts repeats: sizes the filter for at least as many ids
+    return _memoized(
+        ("bloom", path), _dir_fingerprint(path),
+        lambda: bloom_from_df(tomb, "doc_id", tomb.count()),
+    )
 
 
 def verify_suspects(
@@ -124,7 +111,7 @@ def verify_suspects(
         return set()
     found = read_arrow(
         tombstones_path(store), TOMBSTONES_DDL, ["doc_id"],
-        ds.field("doc_id").isin([int(i) for i in suspect_ids]),
+        any_equal("doc_id", [int(i) for i in suspect_ids]),
     )
     return set(found.column("doc_id").to_pylist())
 
@@ -226,7 +213,6 @@ def compact(spark: SparkSession, store: IndexStore) -> dict:
     tomb = tomb.persist()
     n_buckets = cstats["n_buckets"]
     drange_span = cstats["drange_span"]
-    n_chunks = cstats["n_chunks"]
 
     # docs
     docs_live = store.docs(spark).join(tomb, "doc_id", "left_anti")
@@ -246,65 +232,21 @@ def compact(spark: SparkSession, store: IndexStore) -> dict:
     store.replace_dir(tmp, store.postings_path)
 
     # stats (exact recount — the reference's Indexer.java:744-764 semantics)
-    docs = store.docs(spark)
-    crow = docs.agg(
-        F.count("*").alias("n"), F.avg("doc_len").alias("avgdl")
-    ).collect()[0]
-    n_docs, avgdl = crow["n"], float(crow["avgdl"] or 0.0)
+    n_docs, avgdl = corpus_counts(store.docs(spark))
     postings = store.postings(spark)
-    term_stats = build_term_stats(postings, n_docs).withColumn(
-        "tbucket", term_bucket_col(F.col("term"), n_buckets)
-    )
     tmp = store.term_stats_path + "_tmp"
-    (
-        term_stats.repartition(n_buckets, "tbucket")
-        .sortWithinPartitions("term")  # same row-group skipping as the build
-        .write.mode("overwrite")
-        .partitionBy("tbucket")
-        .parquet(tmp)
-    )
+    write_term_stats(postings, n_docs, n_buckets, tmp)
     store.replace_dir(tmp, store.term_stats_path)
 
     # segments: full re-encode into a single fresh chunk set
     seg_tmp = store.segments_path + "_tmp"
-    segs = encode_segments(postings, avgdl, drange_span, n_buckets)
-    (
-        segs.repartition(n_buckets, "tbucket")
-        .write.mode("overwrite").partitionBy("tbucket").parquet(seg_tmp + "/chunk=0")
+    payload = write_chunk(
+        spark, postings, seg_tmp + "/chunk=0", 0, "compaction", avgdl,
+        drange_span, n_buckets,
     )
-    # metrics from the written chunk (no persisted blob copy — see builder)
-    from .storage import SEGMENTS_DDL, _read_or_empty
-
-    m = _read_or_empty(spark, seg_tmp + "/chunk=0", SEGMENTS_DDL).agg(
-        F.count("*").alias("n_segments"),
-        F.sum("df_local").alias("n_postings"),
-        F.countDistinct("term").alias("n_terms"),
-        F.countDistinct("drange").alias("n_dranges"),
-        F.sum(F.length("postings")).alias("bytes"),
-        F.sum(F.length("positions")).alias("pos_bytes"),
-        F.min("first_doc_id").alias("min_doc_id"),
-        F.max("last_doc_id").alias("max_doc_id"),
-    ).collect()[0]
     store.replace_dir(seg_tmp, store.segments_path)
     store.remove_dir(str(store.manifest_dir))
-    store.write_manifest(
-        0,
-        {
-            "chunk": 0,
-            "input": "compaction",
-            "drange_span": drange_span,
-            "encode_avgdl": avgdl,
-            "n_segments": m["n_segments"],
-            "n_postings": int(m["n_postings"] or 0),
-            "n_terms": m["n_terms"],
-            "n_dranges": m["n_dranges"],
-            "bytes": int(m["bytes"] or 0),
-            "pos_bytes": int(m["pos_bytes"] or 0),
-            "min_doc_id": m["min_doc_id"],
-            "max_doc_id": m["max_doc_id"],
-            "completed_unix": time.time(),
-        },
-    )
+    store.write_manifest(0, payload)
     store.remove_dir(tombstones_path(store))
     tomb.unpersist()
 

@@ -34,8 +34,8 @@ import time
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from .build import build_term_stats, encode_segments, term_bucket_col
-from .storage import SEGMENTS_DDL, IndexStore, _read_or_empty
+from .build import corpus_counts, term_bucket_col, write_chunk, write_term_stats
+from .storage import IndexStore
 
 
 def merge_store(
@@ -84,57 +84,14 @@ def merge_store(
     n_merged = docs.count()
 
     # global stats over the MERGED tables — same recompute as append_batch
-    all_docs = dst.docs(spark)
-    crow = all_docs.agg(
-        F.count("*").alias("n"), F.avg("doc_len").alias("avgdl")
-    ).collect()[0]
-    n_docs, avgdl = crow["n"], float(crow["avgdl"] or 0.0)
-    term_stats = build_term_stats(dst.postings(spark), n_docs).withColumn(
-        "tbucket", term_bucket_col(F.col("term"), n_buckets)
-    )
-    (
-        term_stats.repartition(n_buckets, "tbucket")
-        .sortWithinPartitions("term")
-        .write.mode("overwrite")
-        .partitionBy("tbucket")
-        .parquet(dst.term_stats_path)
-    )
+    n_docs, avgdl = corpus_counts(dst.docs(spark))
+    write_term_stats(dst.postings(spark), n_docs, n_buckets, dst.term_stats_path)
 
     # re-encode ONLY the source's postings (shifted ids) into a new chunk
-    segs = encode_segments(shifted, avgdl, drange_span, n_buckets)
-    chunk_path = f"{dst.segments_path}/chunk={new_chunk}"
-    (
-        segs.repartition(n_buckets, "tbucket")
-        .write.mode("overwrite").partitionBy("tbucket").parquet(chunk_path)
-    )
-    m = _read_or_empty(spark, chunk_path, SEGMENTS_DDL).agg(
-        F.count("*").alias("n_segments"),
-        F.sum("df_local").alias("n_postings"),
-        F.countDistinct("term").alias("n_terms"),
-        F.countDistinct("drange").alias("n_dranges"),
-        F.sum(F.length("postings")).alias("bytes"),
-        F.sum(F.length("positions")).alias("pos_bytes"),
-        F.min("first_doc_id").alias("min_doc_id"),
-        F.max("last_doc_id").alias("max_doc_id"),
-    ).collect()[0]
-    dst.write_manifest(
-        new_chunk,
-        {
-            "chunk": new_chunk,
-            "input": f"merge:{src.dir}",
-            "drange_span": drange_span,
-            "encode_avgdl": avgdl,
-            "n_segments": m["n_segments"],
-            "n_postings": int(m["n_postings"] or 0),
-            "n_terms": m["n_terms"],
-            "n_dranges": m["n_dranges"],
-            "bytes": int(m["bytes"] or 0),
-            "pos_bytes": int(m["pos_bytes"] or 0),
-            "min_doc_id": m["min_doc_id"],
-            "max_doc_id": m["max_doc_id"],
-            "completed_unix": time.time(),
-        },
-    )
+    dst.write_manifest(new_chunk, write_chunk(
+        spark, shifted, f"{dst.segments_path}/chunk={new_chunk}", new_chunk,
+        f"merge:{src.dir}", avgdl, drange_span, n_buckets,
+    ))
     shifted.unpersist()
 
     # source deletes travel with their docs

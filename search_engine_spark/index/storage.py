@@ -16,29 +16,36 @@ abstraction. Layout under ``index_dir``:
     segments/chunk=N/     compressed block-max segments (codec.py) — the WAND
                           path; chunked by drange for checkpoint-resume
     stats/terms/          (term, df, idf, bm25_idf, tbucket) part. by tbucket
-    stats/corpus.json     {format_version, n_docs, next_doc_id, avgdl,
-                          drange_span, n_buckets, n_chunks, stem, built_unix
-                          [, last_append_unix, compacted_unix,
-                          last_build_secs]} — ``corpus_stats()`` rejects a
-                          store whose format_version is not FORMAT_VERSION
+    stats/corpus.json     {format_version, store_version, n_docs,
+                          next_doc_id, avgdl, drange_span, n_buckets,
+                          n_chunks, stem, built_unix [, last_append_unix,
+                          compacted_unix, last_build_secs]} — the commit
+                          record: every writer ends by rewriting it
+                          atomically, which mints a fresh store_version;
+                          ``corpus_stats()`` rejects a store whose
+                          format_version is not FORMAT_VERSION (3)
     manifest/chunk_N.json per-chunk lineage + metrics (A11 analog: counters
                           the reference keeps as AtomicInteger,
                           WebCrawler.java:27-29)
 
-Two readers share one fingerprint-invalidated memo: the Spark reader
-(``_read_cached``) for scans, and a driver-side ``pyarrow.dataset`` reader
-(``read_arrow``) for point reads a Spark job would only slow down: the idf
-lookup of uncached query terms (tbucket partition + term filter), the
-enrichment probe of the top-k ids (docs files are written in doc_id order,
-so row-group min/max statistics prune), and the exact check of bloom-suspect
-ids against the tombstones.
+Every driver-side cache lives in one memo (``_memoized``): the Spark
+reader (``_read_cached``) for scans, the driver-side ``pyarrow.dataset``
+reader (``read_arrow``) for point reads a Spark job would only slow down
+(the idf lookup of uncached query terms, the enrichment probe of the top-k
+ids, the exact check of bloom-suspect ids against the tombstones; all
+filtered by ``any_equal`` so row-group min/max statistics prune), and the
+entries derived from the statistics (``store_memo``: the idf cache and the
+dictionary-expansion memo).
 """
 
 from __future__ import annotations
 
 import functools
 import json
+import operator
+import os
 import shutil
+import uuid
 from pathlib import Path
 
 import pyarrow as pa
@@ -56,8 +63,10 @@ from pyspark.sql.types import StructType
 # with the block-skippable positional stream. Version 2: corpus.json
 # carries ``next_doc_id``, the docID high-water mark that appends and
 # merges start from (compaction keeps the survivors' ids, so n_docs, the
-# live count, is not the next free id, and no id is ever reused).
-FORMAT_VERSION = 2
+# live count, is not the next free id, and no id is ever reused). Version
+# 3: corpus.json carries ``store_version``, the token of its last commit,
+# which keys every cache derived from the statistics.
+FORMAT_VERSION = 3
 
 
 class StoreFormatError(RuntimeError):
@@ -98,24 +107,33 @@ def _read_or_empty(spark: SparkSession, path: str, fallback_ddl: str) -> DataFra
 
 
 # ---------------------------------------------------------------------------
-# Reader memo: `spark.read.parquet` costs ~0.2 s per call on a built index
-# (recursive file listing + schema inference from footers) and every query
-# constructs 2-3 readers — ~40% of a served query's latency was re-listing
-# unchanged directories. The memo caches the constructed DataFrame (the
-# UNRESOLVED plan + file index — never rows; every action still computes
-# from parquet) per (session, path), and the driver-side Arrow dataset
-# (``read_arrow``; file list + schema, never rows) per path, each
-# invalidated by a shallow filesystem
-# fingerprint: names, sizes, and mtimes of the artifact's dirs AND files
-# (single-digit ms; see _dir_fingerprint). Every mutation path changes
-# it — full overwrites and replace_dir swap the file set; streaming
-# publish() adds prefix-named files into tbucket=N/ subdirs; unpublish
-# removes them.
+# The memo: one bounded dict of every driver-side cache, each entry stored
+# with the key of the state it was made from and rebuilt when that key
+# changes.
+# * Readers, keyed by a shallow filesystem fingerprint (names, sizes and
+#   mtimes of the artifact's dirs AND files; single-digit ms, see
+#   _dir_fingerprint): the constructed Spark DataFrame per (session, path)
+#   (the UNRESOLVED plan + file index, never rows; `spark.read.parquet`
+#   costs ~0.2 s of listing + footer schema inference, ~40% of a served
+#   query's latency before the memo) and the driver-side Arrow dataset per
+#   path (file list + schema, never rows). Every mutation path changes the
+#   fingerprint: full overwrites and replace_dir swap the file set;
+#   streaming publish() adds prefix-named files into tbucket=N/ subdirs;
+#   unpublish removes them. The fingerprint stays, rather than the store
+#   version, because the writers re-read the dirs they have just rewritten
+#   before they commit corpus.json.
+# * The tombstone bloom (index.deletes), keyed by the tombstones dir's
+#   fingerprint: every mark_deleted append and every compaction changes it.
+# * Entries derived from the statistics (``store_memo``: the idf cache, the
+#   dictionary-expansion memo), keyed by corpus.json's ``store_version``.
+#   Every stats commit (build, append, merge, compaction) mints a new one;
+#   logical deletes do not commit, since they leave the statistics stale
+#   until compaction by design.
 # This is the open-IndexReader analog every production engine holds.
 # ---------------------------------------------------------------------------
 
-_READER_CACHE: dict[tuple, tuple[tuple, DataFrame | ds.Dataset]] = {}
-_READER_CACHE_MAX = 64
+_MEMO: dict[tuple, tuple[object, object]] = {}  # key -> (state, entry)
+_MEMO_MAX = 64
 
 
 def _dir_fingerprint(path: str) -> tuple | None:
@@ -127,8 +145,6 @@ def _dir_fingerprint(path: str) -> tuple | None:
     every file name and size (~a thousand os.stat calls on a built index,
     single-digit ms — vs ~200 ms for spark.read.parquet's listing +
     schema inference)."""
-    import os
-
     root = Path(path)
     try:
         st = root.stat()
@@ -159,15 +175,27 @@ def _dir_fingerprint(path: str) -> tuple | None:
     return tuple(parts)
 
 
-def _memoized(key: tuple, fp: tuple, make):
-    hit = _READER_CACHE.get(key)
-    if hit is not None and hit[0] == fp:
+def _memoized(key: tuple, state, make):
+    """The memo entry ``key``, made by ``make()`` again whenever ``state``
+    differs from the one it was made from. Oldest entries go first."""
+    hit = _MEMO.get(key)
+    if hit is not None and hit[0] == state:
         return hit[1]
-    reader = make()
-    while len(_READER_CACHE) >= _READER_CACHE_MAX:
-        _READER_CACHE.pop(next(iter(_READER_CACHE)))
-    _READER_CACHE[key] = (fp, reader)
-    return reader
+    entry = make()
+    _MEMO.pop(key, None)  # a replaced entry is not an extra one
+    while len(_MEMO) >= _MEMO_MAX:
+        _MEMO.pop(next(iter(_MEMO)))
+    _MEMO[key] = (state, entry)
+    return entry
+
+
+def store_memo(store: "IndexStore", name: str, make):
+    """The memo entry ``name`` of ``store``'s current statistics: made by
+    ``make()`` once per committed store version (a mutable container the
+    caller fills)."""
+    return _memoized(
+        (name, str(store.dir)), store.corpus_stats()["store_version"], make
+    )
 
 
 def _read_cached(spark: SparkSession, path: str, fallback_ddl: str) -> DataFrame:
@@ -195,6 +223,15 @@ _PARQUET = ds.ParquetFileFormat(
 )
 
 
+def any_equal(field: str, values) -> ds.Expression:
+    """``field`` equal to one of ``values``, as OR-ed equalities: pyarrow
+    skips a row group by its min/max statistics for comparisons but never
+    for ``is_in``."""
+    return functools.reduce(
+        operator.or_, (ds.field(field) == v for v in values), ds.scalar(False)
+    )
+
+
 def read_arrow(
     path: str, ddl: str, columns: list[str], filter: ds.Expression
 ) -> pa.Table:
@@ -203,9 +240,9 @@ def read_arrow(
     DDL. A missing or empty dir reads as an empty table. The dataset (file
     listing, hive partitions; ``_``/``.`` files ignored) is memoized next
     to the Spark readers under the same fingerprint. Partition filters
-    skip directories; comparisons (not ``is_in``) also skip row groups by
-    their min/max statistics. Only for driver-sized results: scans stay in
-    Spark."""
+    skip directories; comparisons (``any_equal``, not ``is_in``) also skip
+    row groups by their min/max statistics. Only for driver-sized results:
+    scans stay in Spark."""
     schema = _arrow_schema(ddl)
     fp = _dir_fingerprint(path)
     if fp is None:
@@ -217,6 +254,16 @@ def read_arrow(
         ),
     )
     return dataset.to_table(columns=columns, filter=filter)
+
+
+def _write_json(path: Path, obj) -> None:
+    """Write ``obj`` to ``path`` through a hidden tmp file and one
+    ``os.replace``: a concurrent reader sees the old file or the new one,
+    never a partial one."""
+    path.parent.mkdir(parents=True, exist_ok=True)
+    tmp = path.with_name(f".{path.name}.tmp")
+    tmp.write_text(json.dumps(obj, indent=2))
+    os.replace(tmp, path)
 
 
 class IndexStore:
@@ -252,8 +299,8 @@ class IndexStore:
     def gram_index_path(self) -> str:
         """Conventional in-store location of the persisted q-gram
         dictionary index (query/fuzzy_index.py). The serve path routes
-        through it automatically when its epoch stamp matches the store's
-        current stats epoch."""
+        through it automatically when its stamp matches the store's current
+        ``store_version``."""
         return str(self.dir / "gram_index")
 
     # -- stage completion markers ---------------------------------------
@@ -304,30 +351,16 @@ class IndexStore:
             return False
         return True
 
-    def stats_epoch(self) -> tuple:
-        """Key of the store's current statistics: any stats rewrite (a
-        build, a streaming append recomputing df, a compaction recounting)
-        changes it. Logical deletes do not: they leave the stats stale
-        until compaction, by design. Driver-side caches of anything derived
-        from term statistics (idf, dictionary expansions, the gram index)
-        key on it."""
-        c = self.corpus_stats()
-        return (
-            str(self.dir),
-            c.get("built_unix"),
-            c.get("last_append_unix"),
-            c.get("compacted_unix"),
-        )
-
     def write_corpus_stats(self, stats: dict) -> None:
-        self.corpus_stats_path.parent.mkdir(parents=True, exist_ok=True)
-        self.corpus_stats_path.write_text(json.dumps(stats, indent=2))
+        """Commit ``stats`` as the store's corpus.json under a fresh
+        ``store_version`` (also set in ``stats``). A token, not a counter:
+        a rebuild writes a new dict into the same dir, and a restarted
+        counter would collide with cache entries of the previous build."""
+        stats["store_version"] = uuid.uuid4().hex
+        _write_json(self.corpus_stats_path, stats)
 
     def write_manifest(self, chunk: int, payload: dict) -> None:
-        self.manifest_dir.mkdir(parents=True, exist_ok=True)
-        tmp = self.manifest_dir / f".chunk_{chunk}.json.tmp"
-        tmp.write_text(json.dumps(payload, indent=2))
-        tmp.rename(self.manifest_dir / f"chunk_{chunk}.json")
+        _write_json(self.manifest_dir / f"chunk_{chunk}.json", payload)
 
     def manifests(self) -> list[dict]:
         out = []
@@ -355,10 +388,7 @@ class IndexStore:
         return {"committed": {}, "inflight": {}}
 
     def write_ledger(self, ledger: dict) -> None:
-        self.ledger_path.parent.mkdir(parents=True, exist_ok=True)
-        tmp = self.ledger_path.with_suffix(".json.tmp")
-        tmp.write_text(json.dumps(ledger, indent=2))
-        tmp.rename(self.ledger_path)
+        _write_json(self.ledger_path, ledger)
 
     # -- staged appends ----------------------------------------------------
     # All physical mutations of live artifact dirs go through these two

@@ -67,13 +67,13 @@ def _meta_path(index_dir: str) -> Path:
     return Path(index_dir) / "meta.json"
 
 
-def _store_epoch(store: IndexStore) -> list | None:
-    """``IndexStore.stats_epoch`` as a JSON-comparable stamp (None for a
-    store without stats). Any dictionary rewrite (append recomputes df,
-    compaction recounts) changes it; logical deletes do not (they leave
-    term_stats untouched until compaction, by design)."""
+def _store_version(store: IndexStore) -> str | None:
+    """The store's committed ``store_version`` (None for a store without
+    stats). Any dictionary rewrite (append recomputes df, compaction
+    recounts) changes it; logical deletes do not (they leave term_stats
+    untouched until compaction, by design)."""
     try:
-        return list(store.stats_epoch())
+        return store.corpus_stats()["store_version"]
     except FileNotFoundError:
         return None
 
@@ -82,8 +82,8 @@ def gram_index_for(
     store: IndexStore, max_dist: int = MAX_DIST
 ) -> str | None:
     """The store's in-store gram index dir IFF one exists, was built for a
-    distance bound >= ``max_dist``, and its epoch stamp matches the
-    store's CURRENT stats epoch (a stale index after append/compaction is
+    distance bound >= ``max_dist``, and its stamp matches the store's
+    CURRENT ``store_version`` (a stale index after append/compaction is
     never served — the caller falls back to the dictionary scan)."""
     d = store.gram_index_path
     mp = _meta_path(d)
@@ -95,7 +95,7 @@ def gram_index_for(
         return None
     if meta.get("kind") != "qgram" or int(meta.get("max_dist", 0)) < max_dist:
         return None
-    if meta.get("store_epoch") != _store_epoch(store):
+    if meta.get("store_version") != _store_version(store):
         return None
     return d
 
@@ -113,7 +113,7 @@ def build_gram_index(
     tiny next to the segments. With ``index_dir=None`` the index lands at
     the store's conventional ``gram_index/`` location and the serve path
     (``suggest.spell_suggest`` / ``expand_fuzzy``) picks it up
-    automatically while its epoch stamp stays current."""
+    automatically while its ``store_version`` stamp stays current."""
     if index_dir is None:
         index_dir = store.gram_index_path
     terms = store.term_stats(spark).select(
@@ -155,7 +155,7 @@ def build_gram_index(
                 "kind": "qgram",
                 "q": q,
                 "max_dist": max_dist,
-                "store_epoch": _store_epoch(store),
+                "store_version": _store_version(store),
             }
         )
     )

@@ -60,7 +60,7 @@ def mlt_terms(
     if not cand:
         return []
 
-    # per-term idf via the WAND driver-side stats cache (same epoch
+    # per-term idf via the WAND driver-side stats cache (same store-version
     # invalidation): repeat MLT queries skip the pruned stats collect, and
     # the retrieval step below finds its term weights already cached —
     # one driver round-trip instead of two on the warm path

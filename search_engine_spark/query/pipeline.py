@@ -9,17 +9,14 @@ over compressed segments) — both rank-identical.
 
 from __future__ import annotations
 
-import functools
-import operator
 import re
 
 import pyarrow as pa
-import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..analysis.analyzer import tokenize
-from ..index.storage import DOCS_DDL, IndexStore, read_arrow
+from ..index.storage import DOCS_DDL, IndexStore, any_equal, read_arrow
 from .bm25 import bm25_topk
 from .logical import combine
 from .parser import _WILDCARD_RE, ParsedQuery, parse_query
@@ -86,16 +83,12 @@ def docs_probe(
 ) -> pa.Table:
     """The enrichment read: the six columns a result row needs, for the
     top-k doc ids only, read on the driver (no Spark job). ``ts`` comes
-    back as a UTC instant. One equality per id rather than an ``is_in``:
-    row groups are skipped by their doc_id min/max only for comparisons,
-    and the docs files are written in doc_id order, so the probe opens
-    only the row groups that hold the ids (k equalities stay cheap)."""
+    back as a UTC instant. The docs files are written in doc_id order, so
+    the ``any_equal`` filter opens only the row groups that hold the ids
+    (k equalities stay cheap)."""
     return read_arrow(
         store.docs_path, DOCS_DDL, _PROBE_COLS,
-        functools.reduce(
-            operator.or_, (ds.field("doc_id") == int(i) for i in ids),
-            ds.scalar(False),
-        ),
+        any_equal("doc_id", [int(i) for i in ids]),
     )
 
 

@@ -30,31 +30,25 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..index.storage import IndexStore
+from ..index.storage import IndexStore, store_memo
 
 PREFIX_EXPAND_LIMIT = 8
 
-# driver-side expansion memo: {store epoch key: {(kind, word, params):
-# [terms]}} — a repeated wildcard/fuzzy query must not re-run its
-# dictionary scan (the fuzzy one is a JVM levenshtein over a full length
-# band: ~10^7 rows at a 10^8-term vocabulary). Keyed by
-# ``IndexStore.stats_epoch``, like wand._IDF_CACHE: any stats rewrite
-# (append recomputes df, compaction recounts) starts a fresh entry; logical
-# deletes intentionally do NOT invalidate (expansions rank by df, which
-# stays stale until compaction by design).
-_EXPAND_CACHE: dict[tuple, dict[tuple, list[str]]] = {}
-_EXPAND_CACHE_MAX_STORES = 8
-_EXPAND_CACHE_MAX_ENTRIES = 10_000
+# driver-side expansion memo: {(kind, word, params): [terms]}, one per
+# committed store version (an entry of the store memo,
+# ``storage.store_memo``, like the wand idf cache) — a repeated
+# wildcard/fuzzy query must not re-run its dictionary scan (the fuzzy one is
+# a JVM levenshtein over a full length band: ~10^7 rows at a 10^8-term
+# vocabulary). Every stats commit (append recomputes df, compaction
+# recounts) starts a fresh entry; logical deletes intentionally do NOT
+# invalidate (expansions rank by df, which stays stale until compaction by
+# design).
+_EXPAND_MAX_ENTRIES = 10_000
 
 
 def _expansion_cache(store: IndexStore) -> dict[tuple, list[str]]:
-    key = store.stats_epoch()
-    cache = _EXPAND_CACHE.get(key)
-    if cache is None:
-        while len(_EXPAND_CACHE) >= _EXPAND_CACHE_MAX_STORES:
-            _EXPAND_CACHE.pop(next(iter(_EXPAND_CACHE)))
-        cache = _EXPAND_CACHE[key] = {}
-    elif len(cache) > _EXPAND_CACHE_MAX_ENTRIES:
+    cache = store_memo(store, "expand", dict)
+    if len(cache) > _EXPAND_MAX_ENTRIES:
         cache.clear()
     return cache
 
@@ -67,7 +61,7 @@ def expand_prefix(
     (df desc, term asc) — deterministic under df ties. Returns a plain
     term list: expansion terms join the query's analyzed terms with
     qtf = 1 each (duplicates with literal query terms accumulate qtf,
-    like repeated user-typed terms). Memoized per store epoch — a repeat
+    like repeated user-typed terms). Memoized per store version — a repeat
     query issues no dictionary job."""
     p = (prefix or "").lower()
     if not p:
@@ -97,7 +91,7 @@ def spell_suggest(
     """Did-you-mean candidates for ``word``: dictionary terms within
     ``max_dist`` edits, ranked by (dist asc, df desc, term asc), top ``k``.
     Returns (term, df, dist). Routes through the store's persisted q-gram
-    index (fuzzy_index.py) when a current-epoch one exists — gram
+    index (fuzzy_index.py) when a current one exists — gram
     partition pruning + count filter instead of a full length-band
     dictionary scan; row-identical by construction (the index is an
     access path, not a semantics change; tests assert equality)."""
@@ -135,7 +129,7 @@ def expand_wildcard(
     over the term-sorted dictionary (row-group min/max skipping), the full
     pattern as a LIKE on the survivors; a leading-star pattern degrades to
     a full dictionary scan — the standard engine behavior (Lucene warns on
-    leading wildcards for the same reason). Memoized per store epoch."""
+    leading wildcards for the same reason). Memoized per store version."""
     p = (pattern or "").lower()
     if not p.strip("*"):
         return []
@@ -175,7 +169,7 @@ def expand_fuzzy(
     collected into a plain term list: expansion terms join the query with
     qtf = 1 each, exactly like wildcard expansions. ≤ ``limit`` terms ever
     reach the driver; they become ordinary query terms from there.
-    Memoized per store epoch — a repeat fuzzy query issues no dictionary
+    Memoized per store version — a repeat fuzzy query issues no dictionary
     levenshtein job."""
     w = (word or "").lower()
     cache = _expansion_cache(store)

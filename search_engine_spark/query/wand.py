@@ -32,7 +32,9 @@ from pyspark.sql import functions as F
 
 from ..index.build import term_bucket_py
 from ..index.codec import BM25_B, BM25_K1, PostingSegment
-from ..index.storage import TERM_STATS_DDL, IndexStore, read_arrow
+from ..index.storage import (
+    TERM_STATS_DDL, IndexStore, any_equal, read_arrow, store_memo,
+)
 from .phrase import shard_map
 
 
@@ -258,26 +260,19 @@ def blockmax_topk_segments(
     return out
 
 
-# driver-side term-stats cache: {store stats epoch: {term: bm25_idf | None}}.
-# None memoizes "term not in the index" so absent terms do not re-collect on
-# every query. ``IndexStore.stats_epoch`` changes on every stats rewrite
-# (streaming append recomputes df, compaction recounts), which starts a
-# fresh entry — logical deletes intentionally do NOT invalidate (stats stay
+# driver-side term-stats cache: {term: bm25_idf | None}, one per committed
+# store version (an entry of the store memo, ``storage.store_memo``). None
+# memoizes "term not in the index" so absent terms are not re-read on every
+# query. Every stats commit (build, append, merge, compaction) starts a
+# fresh entry; logical deletes intentionally do NOT invalidate (stats stay
 # stale until compaction by design).
-_IDF_CACHE: dict[tuple, dict[str, float | None]] = {}
-_IDF_CACHE_MAX_STORES = 8
-_IDF_CACHE_MAX_TERMS = 100_000
+_IDF_MAX_TERMS = 100_000
 
 
 def _cached_term_idf(
     spark: SparkSession, store: IndexStore, terms: list[str], n_buckets: int
 ) -> dict[str, float | None]:
-    key = store.stats_epoch()
-    cache = _IDF_CACHE.get(key)
-    if cache is None:
-        while len(_IDF_CACHE) >= _IDF_CACHE_MAX_STORES:
-            _IDF_CACHE.pop(next(iter(_IDF_CACHE)))
-        cache = _IDF_CACHE[key] = {}
+    cache = store_memo(store, "idf", dict)
     missing = sorted(t for t in set(terms) if t not in cache)
     if missing:
         # a point read on the driver (no Spark job) of the query terms'
@@ -285,9 +280,9 @@ def _cached_term_idf(
         buckets = sorted({term_bucket_py(t, n_buckets) for t in missing})
         found = read_arrow(
             store.term_stats_path, TERM_STATS_DDL, ["term", "bm25_idf"],
-            ds.field("tbucket").isin(buckets) & ds.field("term").isin(missing),
+            ds.field("tbucket").isin(buckets) & any_equal("term", missing),
         ).to_pydict()
-        if len(cache) + len(missing) > _IDF_CACHE_MAX_TERMS:
+        if len(cache) + len(missing) > _IDF_MAX_TERMS:
             cache.clear()
         for t in missing:
             cache[t] = None

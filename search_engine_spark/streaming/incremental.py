@@ -36,13 +36,13 @@ from pyspark.sql import functions as F
 
 from ..corpus import TRANSCRIPTS_SCHEMA_DDL
 from ..index.build import (
-    N_TERM_BUCKETS,
     assign_doc_ids,
     build_postings,
-    build_term_stats,
-    encode_segments,
+    corpus_counts,
     term_bucket_col,
     with_terms,
+    write_chunk,
+    write_term_stats,
 )
 from ..index.storage import IndexStore
 
@@ -117,63 +117,18 @@ def append_batch(
     store.publish(stage, store.postings_path, prefix)
     n_new = analyzed.count()
 
-    # global stats: recompute from the merged postings (pruned columns)
-    merged = store.postings(spark)
-    all_docs = store.docs(spark)
-    crow = all_docs.agg(
-        F.count("*").alias("n"), F.avg("doc_len").alias("avgdl")
-    ).collect()[0]
-    n_docs, avgdl = crow["n"], float(crow["avgdl"] or 0.0)
-    term_stats = build_term_stats(merged, n_docs).withColumn(
-        "tbucket", term_bucket_col(F.col("term"), n_buckets)
-    )
-    (
-        term_stats.repartition(n_buckets, "tbucket")
-        .sortWithinPartitions("term")  # same row-group skipping as the build
-        .write.mode("overwrite")
-        .partitionBy("tbucket")
-        .parquet(store.term_stats_path)
+    # global stats: recompute from the merged tables (pruned columns)
+    n_docs, avgdl = corpus_counts(store.docs(spark))
+    write_term_stats(
+        store.postings(spark), n_docs, n_buckets, store.term_stats_path
     )
 
     # encode the delta into a new chunk (doc ranges disjoint from old chunks;
     # chunk number pinned -> overwrite is retry-safe)
-    segs = encode_segments(compact, avgdl, drange_span, n_buckets)
-    chunk_path = f"{store.segments_path}/chunk={new_chunk}"
-    (
-        segs.repartition(n_buckets, "tbucket")
-        .write.mode("overwrite").partitionBy("tbucket").parquet(chunk_path)
-    )
-    # metrics from the written chunk (no persisted blob copy — see builder)
-    from ..index.storage import SEGMENTS_DDL, _read_or_empty
-
-    m = _read_or_empty(spark, chunk_path, SEGMENTS_DDL).agg(
-        F.count("*").alias("n_segments"),
-        F.sum("df_local").alias("n_postings"),
-        F.countDistinct("term").alias("n_terms"),
-        F.countDistinct("drange").alias("n_dranges"),
-        F.sum(F.length("postings")).alias("bytes"),
-        F.sum(F.length("positions")).alias("pos_bytes"),
-        F.min("first_doc_id").alias("min_doc_id"),
-        F.max("last_doc_id").alias("max_doc_id"),
-    ).collect()[0]
-    store.write_manifest(
-        new_chunk,
-        {
-            "chunk": new_chunk,
-            "input": "transcripts-stream",
-            "drange_span": drange_span,
-            "encode_avgdl": avgdl,
-            "n_segments": m["n_segments"],
-            "n_postings": int(m["n_postings"] or 0),
-            "n_terms": m["n_terms"],
-            "n_dranges": m["n_dranges"],
-            "bytes": int(m["bytes"] or 0),
-            "pos_bytes": int(m["pos_bytes"] or 0),
-            "min_doc_id": m["min_doc_id"],
-            "max_doc_id": m["max_doc_id"],
-            "completed_unix": time.time(),
-        },
-    )
+    store.write_manifest(new_chunk, write_chunk(
+        spark, compact, f"{store.segments_path}/chunk={new_chunk}", new_chunk,
+        "transcripts-stream", avgdl, drange_span, n_buckets,
+    ))
     for df_ in cleanup:
         df_.unpersist()
 

@@ -109,6 +109,44 @@ def test_enrichment_probe_reads_only_the_ids_row_groups(
     assert touched == [str(files[-1])], touched
 
 
+def test_suspect_check_reads_only_the_ids_row_groups(
+    spark, tmp_path, monkeypatch
+):
+    """The exact check of bloom suspects against the tombstones skips every
+    tombstone file that holds none of the ids: after three delete appends,
+    a check of one append's id opens only that id's files."""
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+
+    from search_engine_spark.index import deletes
+    from search_engine_spark.index.storage import IndexStore
+
+    store = IndexStore(str(tmp_path / "ix"))
+    for ids in ([1, 2], [10, 11], [20, 21]):
+        deletes.mark_deleted(spark, store, ids)
+    pushed = []
+    read = deletes.read_arrow
+    monkeypatch.setattr(
+        deletes, "read_arrow",
+        lambda path, ddl, cols, flt: pushed.append(flt) or read(
+            path, ddl, cols, flt
+        ),
+    )
+    assert deletes.verify_suspects(spark, store, [11, 99]) == {11}
+    (flt,) = pushed
+    path = deletes.tombstones_path(store)
+    holding = [
+        str(f) for f in sorted(Path(path).glob("*.parquet"))
+        if 11 in pq.read_table(f).column("doc_id").to_pylist()
+    ]
+    touched = sorted(
+        f.path for f in ds.dataset(path).get_fragments()
+        if f.subset(filter=flt).num_row_groups
+    )
+    assert len(list(Path(path).glob("*.parquet"))) >= 3
+    assert touched == holding, touched
+
+
 def test_wand_segment_scan_prunes_by_term(spark, index_store):
     from search_engine_spark.index.build import term_bucket_py
 

@@ -14,6 +14,7 @@ import pandas as pd
 import pytest
 
 from search_engine_spark.index.deletes import mark_deleted, verify_suspects
+from search_engine_spark.index import storage
 from search_engine_spark.index.storage import IndexStore
 from search_engine_spark.query import pipeline, wand
 from search_engine_spark.query.pipeline import search
@@ -30,6 +31,12 @@ CLASSES = {
 }
 
 _group = itertools.count()
+
+
+def _drop_idf_entries():
+    """Forget every store's cached idf; the memo's readers stay warm."""
+    for key in [k for k in storage._MEMO if k[0] == "idf"]:
+        del storage._MEMO[key]
 
 
 def _jobs(spark, action):
@@ -67,7 +74,7 @@ def test_cold_idf_cache_adds_no_job(spark, index_store):
     query, engine, expected = CLASSES["wand"]
     search(spark, index_store, query, k=10, engine=engine)  # warm readers
     fresh = "venba drosel"
-    wand._IDF_CACHE.clear()
+    _drop_idf_entries()
     df, n_cold = _jobs(spark, lambda: search(
         spark, index_store, fresh, k=10, engine=engine
     ))
@@ -81,7 +88,7 @@ def test_cold_idf_cache_adds_no_job(spark, index_store):
 def test_point_lookups_launch_no_job(spark, index_store, tmp_path):
     """The idf lookup of uncached terms, the enrichment probe and the
     tombstone check of bloom suspects are driver reads of the parquet."""
-    wand._IDF_CACHE.clear()
+    _drop_idf_entries()
     n_buckets = index_store.corpus_stats()["n_buckets"]
     idf, n = _jobs(spark, lambda: wand._cached_term_idf(
         spark, index_store, ["baba", "nosuchterm"], n_buckets

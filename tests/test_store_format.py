@@ -3,6 +3,7 @@ every writer leaves the current one, and a store without it fails at its
 first stats read with ``StoreFormatError`` instead of deep inside a kernel."""
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -107,3 +108,27 @@ def test_old_store_fails_at_first_stats_read(spark, transcripts_df, tmp_path):
                 search(spark, store, q, k=5, engine=engine)
     with pytest.raises(StoreFormatError):
         append_batch(spark, store, transcripts_df)
+
+
+def test_failed_commit_keeps_the_old_stats(tmp_path, monkeypatch):
+    """corpus.json is the store's commit record: a writer that dies before
+    its commit completes leaves the previous stats readable, and every
+    commit mints a new store_version."""
+    store = IndexStore(str(tmp_path / "s"))
+    store.write_corpus_stats({"format_version": FORMAT_VERSION, "n_docs": 1})
+    old = store.corpus_stats()
+
+    def crash(src, dst):
+        raise OSError("killed mid-commit")
+
+    monkeypatch.setattr(os, "replace", crash)
+    with pytest.raises(OSError, match="mid-commit"):
+        store.write_corpus_stats(
+            {"format_version": FORMAT_VERSION, "n_docs": 2}
+        )
+    monkeypatch.undo()
+    assert store.corpus_stats() == old
+    store.write_corpus_stats({"format_version": FORMAT_VERSION, "n_docs": 2})
+    new = store.corpus_stats()
+    assert new["n_docs"] == 2
+    assert new["store_version"] != old["store_version"]
