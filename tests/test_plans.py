@@ -144,3 +144,76 @@ def test_suspect_check_reads_only_the_ids_row_groups(
         if f.subset(filter=flt).num_row_groups
     ]
     assert touched == [files[1]], touched
+
+
+def test_wand_segment_scan_prunes_by_term(spark, index_store):
+    from search_engine_spark.index.build import term_bucket_py
+
+    term = "spark"
+    segs = (
+        index_store.segments(spark)
+        .filter(F.col("tbucket") == term_bucket_py(term))
+        .filter(F.col("term") == term)
+    )
+    plan = _plan(segs)
+    # tbucket is a partition dir inside each chunk -> whole-bucket pruning
+    assert "PartitionFilters" in plan
+    assert "tbucket" in plan.split("PartitionFilters", 1)[1].split("\n", 1)[0]
+    assert "PushedFilters" in plan
+    assert "term" in plan.split("PushedFilters", 1)[1].split("\n", 1)[0]
+
+
+def test_near_chain_scan_prunes_by_term(spark, index_store, oracle_index):
+    """The ordered-chain kernel's input scan must carry the same tbucket
+    partition pruning + pushed term filter as every other segment serve."""
+    from search_engine_spark.query.proximity import near_chain_matches
+
+    terms = sorted(oracle_index.positions)[:3]
+    df = near_chain_matches(spark, index_store, terms, 5)
+    plan = _plan(df)
+    assert "PartitionFilters" in plan
+    assert "tbucket" in plan.split("PartitionFilters", 1)[1].split("\n", 1)[0]
+    assert "PushedFilters" in plan
+    assert "term" in plan.split("PushedFilters", 1)[1].split("\n", 1)[0]
+
+
+def test_lm_topk_has_no_window_exchange(spark, index_store):
+    """cf(t) comes from the build-time term_stats column (broadcast with
+    the stats join) — the LM plan must not contain the per-term Window
+    (a maximally skewed shuffle: every posting of a head term in ONE
+    partition) the pre-cf serve path used."""
+    from search_engine_spark.analysis import analyze_query
+    from search_engine_spark.query.lm import lm_dirichlet_topk
+
+    df = lm_dirichlet_topk(spark, index_store, analyze_query("spark index"), k=10)
+    plan = _plan(df)
+    assert "Window" not in plan
+    assert "TakeOrderedAndProject" in plan
+
+
+def test_serve_kernels_cross_one_arrow_boundary(spark, index_store, oracle_index):
+    """WAND, phrase, NEAR, NEAR chain and the logical-query phrase kernel
+    all run through ``phrase.shard_map``: the executed plan of each holds
+    the Arrow grouped-map node and no pandas one."""
+    from search_engine_spark.analysis import analyze_query
+    from search_engine_spark.query.phrase import phrase_matches_multi, phrase_topk
+    from search_engine_spark.query.proximity import near_chain_topk, near_topk
+    from search_engine_spark.query.wand import bm25_topk_wand
+
+    a, b = analyze_query("spark index")
+    served = {
+        "wand": bm25_topk_wand(spark, index_store, [a, b], k=5),
+        "phrase": phrase_topk(spark, index_store, [a, b], k=5),
+        "near": near_topk(spark, index_store, a, b, 3, k=5),
+        "near_chain": near_chain_topk(
+            spark, index_store, sorted(oracle_index.positions)[:3], 5, k=5
+        ),
+        "logical": phrase_matches_multi(
+            spark, index_store, [[a, b], analyze_query("query model")]
+        ),
+    }
+    for name, df in served.items():
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "FlatMapGroupsInArrow" in plan, (name, plan)
+        assert "FlatMapGroupsInPandas" not in plan, (name, plan)
